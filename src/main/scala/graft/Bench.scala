@@ -93,6 +93,7 @@ object Bench {
       java.nio.file.Paths.get("target/bench_last.json"), full + "\n")
     catch { case _: Throwable => }
     println(full)
+    graft.io.TpchRdf.release(spark)
     spark.stop()
   }
 }

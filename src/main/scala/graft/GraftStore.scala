@@ -1,29 +1,76 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.algebra.Algebra._
 import graft.io.{PartitionedQuadStore, RdfIO}
 import graft.model.Term
+import graft.ops.Skew
 import graft.parser.SparqlParser
-import graft.update.UpdateExec
+import graft.update.{DeltaUpdate, UpdateExec}
 
 /** The reference's embedded store API re-expressed over a quad DataFrame
   * (oxigraph: lib/oxigraph/src/store.rs · Store; python · pyoxigraph
   * Store) — the top entry point of SURVEY.md §3.1, minus transactions
   * (out of scope by design: SURVEY §2.10). A `GraftStore` is immutable;
-  * update operations return a NEW store over the transformed quad table,
-  * so "commit" is writing the table out (`save`) — batch-dataset
-  * semantics instead of MVCC.
+  * update operations return a NEW store, so "commit" is writing the
+  * table out (`save`) — batch-dataset semantics instead of MVCC.
+  *
+  * A store is a BASE plus one bounded DELTA. The base is the opened (or
+  * last rebuilt) quad DataFrame; the delta is two driver-side quad sets,
+  * inserted `I` and deleted `D`, with `I ∩ D = ∅`. Reads see
+  *
+  *   quads = (base ▷ (I ∪ D)) ∪ I
+  *
+  * — one left-anti join against a broadcast `LocalRelation` plus one
+  * union, the same shape after 1 write or 1,000 and no shuffle of the
+  * base (the S2RDF split: the vertically partitioned store stays the
+  * scan, writes are a small overlay on it). Oxigraph applies an update
+  * once and later reads see a plain store; so here a write is
+  * evaluated once, against the pre-state, and never re-run by reads.
+  *
+  * Every op [[graft.update.DeltaUpdate.delta]] factors into (deletes,
+  * inserts) — INSERT/DELETE DATA, DELETE/INSERT WHERE (with
+  * WITH/USING), LOAD, ADD — is collected (`limit(gate + 1)`) and
+  * composed: `I' = (I ∖ Dop) ∪ Iop`, `D' = (D ∪ Dop) ∖ Iop`. The gate is
+  * [[graft.ops.Skew.BroadcastRowGate]] rows for `|I'| + |D'|`, so the
+  * broadcast side never exceeds the engine's one broadcast bound. Ops
+  * with no delta shape (CLEAR/DROP/COPY/MOVE), and deltas past the gate,
+  * take the full rebuild ([[graft.update.UpdateExec]]): the current
+  * `quads` folds into a new base and the delta resets to empty.
+  *
+  * Untouched base quads are not deduplicated by a write: the base is
+  * taken as the set it was loaded as.
   */
-final class GraftStore private (val quads: DataFrame,
+final class GraftStore private (base: DataFrame,
+    inserted: Set[Row], deleted: Set[Row],
     /** Named graphs that exist while (possibly) holding no quads —
       * CREATEd or CLEARed; graphs with quads are implicit. Metadata-scale
       * (names only), so a driver-side set like the predicate catalog.
       */
-    val emptyGraphs: Set[String] = Set.empty) {
-  private def spark: SparkSession = quads.sparkSession
+    val emptyGraphs: Set[String]) {
+  private def spark: SparkSession = base.sparkSession
+
+  /** The dataset: the base overlaid with the delta (see the class doc). */
+  lazy val quads: DataFrame =
+    if (inserted.isEmpty && deleted.isEmpty) base
+    else {
+      val b = base.select(GraftStore.Cols.map(col): _*)
+      // Term.quadSchema, not the base's: a base built from constant
+      // columns may declare a term field non-nullable that a delta row
+      // (an IRI's dt, say) leaves null
+      def local(rows: Set[Row]): DataFrame =
+        spark.createDataFrame(rows.toSeq.asJava, Term.quadSchema)
+      val kept = b.join(broadcast(local(inserted ++ deleted)),
+        GraftStore.Cols, "left_anti")
+      if (inserted.isEmpty) kept else kept.union(local(inserted))
+    }
+
+  /** Rows in the delta (`|I| + |D|`); 0 right after open or a rebuild. */
+  private[graft] def deltaRows: Int = inserted.size + deleted.size
 
   /** SELECT/ASK/CONSTRUCT/DESCRIBE over this store (Store::query).
     * Threads the empty-graph registry so the GRAPH catalog (graph
@@ -33,9 +80,10 @@ final class GraftStore private (val quads: DataFrame,
     SparqlParser.execute(sparql, quads, emptyGraphs.toSeq.sorted)
 
   /** SPARQL Update (possibly `;`-chained) → the updated store
-    * (Store::update; evaluation in update/UpdateExec). CREATE/DROP/CLEAR
-    * also maintain the empty-graph registry, so `namedGraphs` sees
-    * graphs CREATEd empty and graphs CLEARed down to zero quads.
+    * (Store::update; see the class doc for the base+delta model).
+    * CREATE/DROP/CLEAR also maintain the empty-graph registry, so
+    * `namedGraphs` sees graphs CREATEd empty and graphs CLEARed down to
+    * zero quads.
     */
   def update(sparql: String): GraftStore = update(sparql, Nil, Nil)
 
@@ -60,10 +108,46 @@ final class GraftStore private (val quads: DataFrame,
           di.copy(using = usingDefault, usingNamed = usingNamed)
         case op => op
       }
-    val (q, g) = ops.foldLeft((quads, emptyGraphs)) { case ((q, g), op) =>
-      UpdateExec.applyWithGraphs(op, q, g)
+    ops.foldLeft(this)(_ applyOp _)
+  }
+
+  /** Insert the rows of a quad DataFrame (g/s/p/o term structs) —
+    * Store::extend; the Graph Store Protocol's POST merge. Takes the
+    * same delta path as INSERT DATA.
+    */
+  def extend(rows: DataFrame): GraftStore =
+    withDelta(None, Some(rows), emptyGraphs)
+
+  private def applyOp(op: UpdateOp): GraftStore = {
+    val graphs = UpdateExec.graphsAfter(op, quads, emptyGraphs)
+    DeltaUpdate.delta(op, quads) match {
+      case Some((d, i)) => withDelta(d, i, graphs)
+      case None => GraftStore(UpdateExec(op, quads), graphs)
     }
-    new GraftStore(q, g)
+  }
+
+  /** Compose an op's (deletes, inserts) into the delta, or fold it
+    * into a new base when either side, or the composed delta, passes
+    * the gate.
+    */
+  private def withDelta(del: Option[DataFrame], ins: Option[DataFrame],
+      graphs: Set[String]): GraftStore = {
+    val gate = Skew.BroadcastRowGate
+    def rows(side: Option[DataFrame]): Option[Set[Row]] =
+      side.fold(Option(Set.empty[Row])) { df =>
+        val got = df.select(GraftStore.Cols.map(col): _*)
+          .limit((gate + 1).toInt).collect()
+        if (got.length > gate) None else Some(got.toSet)
+      }
+    val composed = for {
+      d <- rows(del)
+      i <- rows(ins)
+      ins2 = (inserted -- d) ++ i
+      del2 = (deleted ++ d) -- i
+      if ins2.size + del2.size <= gate
+    } yield new GraftStore(base, ins2, del2, graphs)
+    composed.getOrElse(
+      GraftStore(UpdateExec.applyDelta(quads, del, ins), graphs))
   }
 
   /** Parsed algebra + the Catalyst plan Spark will run — the analogue of
@@ -104,8 +188,7 @@ final class GraftStore private (val quads: DataFrame,
 
   /** Load an RDF file into the default or a named graph (Store::load). */
   def load(path: String, into: Option[String] = None): GraftStore =
-    new GraftStore(UpdateExec(LoadGraph(path, into), quads),
-      emptyGraphs ++ into)
+    applyOp(LoadGraph(path, into))
 
   /** Serialize the full dataset as N-Quads (Store::dump). */
   def dumpNQuads(path: String): Unit = RdfIO.writeNQuads(quads, path)
@@ -123,7 +206,7 @@ final class GraftStore private (val quads: DataFrame,
     * documented WL corner.
     */
   def canonicalize(): GraftStore =
-    new GraftStore(graft.model.Canon.canonicalize(quads), emptyGraphs)
+    GraftStore(graft.model.Canon.canonicalize(quads), emptyGraphs)
 
   /** Dataset isomorphism against another store (bnode-renaming
     * invariant equality).
@@ -158,21 +241,16 @@ final class GraftStore private (val quads: DataFrame,
 
   /** Store::insert_named_graph — register `iri`, possibly empty. */
   def insertNamedGraph(iri: String): GraftStore =
-    new GraftStore(quads, emptyGraphs + iri)
+    new GraftStore(base, inserted, deleted, emptyGraphs + iri)
 
   /** Store::remove_named_graph — drop quads AND the registry entry. */
   def removeNamedGraph(iri: String): GraftStore =
-    new GraftStore(UpdateExec(DropGraph(Some(iri)), quads),
-      emptyGraphs - iri)
+    applyOp(DropGraph(Some(iri)))
 
   /** Store::clear_graph — drop quads, keep the graph alive (empty).
     * Clearing a graph that never existed must NOT create it.
     */
-  def clearGraph(iri: String): GraftStore = {
-    val existed = containsNamedGraph(iri)
-    new GraftStore(UpdateExec(ClearGraph(Some(iri)), quads),
-      if (existed) emptyGraphs + iri else emptyGraphs)
-  }
+  def clearGraph(iri: String): GraftStore = applyOp(ClearGraph(Some(iri)))
 
   /** Quad count (Store::len). */
   def size: Long = quads.count()
@@ -186,7 +264,7 @@ final class GraftStore private (val quads: DataFrame,
     */
   def save(path: String): Unit = {
     PartitionedQuadStore.write(quads, path)
-    val ss = quads.sparkSession
+    val ss = spark
     import ss.implicits._
     emptyGraphs.toSeq.sorted.toDF("g")
       .coalesce(1).write.mode("overwrite")
@@ -195,21 +273,23 @@ final class GraftStore private (val quads: DataFrame,
 }
 
 object GraftStore {
+  private val Cols = Seq("g", "s", "p", "o")
+
   /** Wrap an existing quad DataFrame (g/s/p/o term structs). */
-  def apply(quads: DataFrame): GraftStore = new GraftStore(quads)
+  def apply(quads: DataFrame): GraftStore = apply(quads, Set.empty)
 
   /** Wrap a quad DataFrame, carrying an existing empty-graph registry
     * (stores rebuilt from a transformed quad table — e.g. Graph Store
     * Protocol writes — must NOT lose CREATEd/CLEARed graphs).
     */
   def apply(quads: DataFrame, emptyGraphs: Set[String]): GraftStore =
-    new GraftStore(quads, emptyGraphs)
+    new GraftStore(quads, Set.empty, Set.empty, emptyGraphs)
 
   /** Empty store. */
   def empty(spark: SparkSession): GraftStore =
-    new GraftStore(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq("g", "s", "p", "o").map(
+    apply(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row],
+      org.apache.spark.sql.types.StructType(Cols.map(
         n => org.apache.spark.sql.types.StructField(n, Term.schema, true)))))
 
   /** Apply a SPARQL update to a store saved at `path` IN PLACE:
@@ -229,13 +309,13 @@ object GraftStore {
         .collect().map(_.getString(0)).toSet
       catch { case _: org.apache.spark.sql.AnalysisException =>
         Set.empty[String] } // pre-registry layout: no sidecar
-    new GraftStore(PartitionedQuadStore(spark, path).all, empties)
+    apply(PartitionedQuadStore(spark, path).all, empties)
   }
 
   /** Build a store from an RDF file in any supported format. */
   def fromFile(spark: SparkSession, path: String,
       format: String): GraftStore =
-    new GraftStore(toQuads(RdfIO.read(spark, path, format)))
+    apply(toQuads(RdfIO.read(spark, path, format)))
 
   private def toQuads(df: DataFrame): DataFrame =
     if (df.columns.contains("g")) df.select("g", "s", "p", "o")

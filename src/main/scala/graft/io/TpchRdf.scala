@@ -82,15 +82,24 @@ object TpchRdf {
   /** Unpersist and forget this session's store caches (base quad table
     * + per-predicate index slices) for `dir`, or for every dir the
     * session has loaded when `dir` is null (r13, advice: the slices had
-    * no release path — a leak in long-lived/shared JVMs).
+    * no release path — a leak in long-lived/shared JVMs), and delete
+    * their on-disk parquet copies.
     */
   def release(spark: SparkSession, dir: String = null): Unit = {
     val keys = (cache.keys ++ srcCache.keys).toSet
       .filter(k => k._1 == spark && (dir == null || k._2 == dir))
     keys.foreach { k =>
-      srcCache.remove(k).foreach(_.index.values.foreach(_.unpersist()))
+      srcCache.remove(k).foreach { src =>
+        src.index.values.foreach(_.unpersist())
+        // another live session may still read the same dir's copy
+        if (!srcCache.keys.exists(_._2 == k._2))
+          deleteTree(new java.io.File(storePath(k._2)))
+      }
       cache.remove(k).foreach(_.unpersist())
     }
+    // the JVM's own store root goes with its last store
+    val root = new java.io.File(pidRoot)
+    if (Option(root.list()).exists(_.isEmpty)) root.delete()
   }
 
   /** The quad store as a QuadSource over an on-disk VERTICAL PARTITION
@@ -150,8 +159,22 @@ object TpchRdf {
     * store from a previous code version.
     */
   private def storePath(dir: String): String =
-    "target/quadstore/p" + ProcessHandle.current().pid() + "/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_")
+    pidRoot + "/" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
+
+  /** This JVM's store root. Removed by [[release]] once its last store
+    * goes, and at JVM exit by a shutdown hook registered on first use,
+    * so finished processes leave no copy behind.
+    */
+  private lazy val pidRoot: String = {
+    val root = "target/quadstore/p" + ProcessHandle.current().pid()
+    sys.addShutdownHook(deleteTree(new java.io.File(root)))
+    root
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
+  }
 
   /** The full quad table as a 3-node parquet scan over the on-disk
     * store (r13). For the UPDATE paths: a `;`-chained update folds each

@@ -12,6 +12,15 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
+  /** The row-count bound for a forced broadcast: a relation hinted into
+    * a broadcast join should hold at most this many rows. Read by
+    * [[saltedJoin]] (replicated small side) and by [[graft.GraftStore]]
+    * (the store's insert/delete delta, which every read anti-joins as a
+    * broadcast `LocalRelation`); the dedup drop lists in [[Dedup]] still
+    * broadcast without it.
+    */
+  val BroadcastRowGate: Long = 1L << 17
+
   /** Deterministic uniform salt for a row (id-based, no rand()). */
   private def salt(salts: Int): Column =
     pmod(xxhash64(monotonically_increasing_id()), lit(salts.toLong))
@@ -43,7 +52,7 @@ object Skew {
     // skew), above it the shuffle join that salting exists for wins.
     val replicatedRows = small.count() * salts
     val rightSide =
-      if (replicatedRows <= (1L << 17)) broadcast(replicatedSmall)
+      if (replicatedRows <= BroadcastRowGate) broadcast(replicatedSmall)
       else replicatedSmall.hint("shuffle_hash")
     saltedBig.join(rightSide, Seq(key, "__salt")).drop("__salt")
   }

@@ -37,10 +37,16 @@ import graft.parser.SparqlParser
   *   expanded JSON-LD.
   * - `POST /update` — urlencoded form or `application/sparql-update`
   *   body; 204 on success. Updates serialize through one lock (the
-  *   store is immutable; the reference serializes writers too).
+  *   store is immutable; the reference serializes writers too). Each
+  *   write is evaluated once, at request time, and composed into the
+  *   store's bounded insert/delete delta ([[GraftStore]]: base plus at
+  *   most `Skew.BroadcastRowGate` delta rows), so later reads plan the
+  *   same overlay however many writes came before; a write past the
+  *   gate, or a CLEAR/DROP/COPY/MOVE, rebuilds the base instead.
   * - `/store` (GSP): `?graph=<iri>` or default graph. GET/HEAD dump
   *   N-Triples / Turtle / JSON-LD by Accept (404 for an absent named
-  *   graph), PUT replaces, POST merges, DELETE drops. Payload formats:
+  *   graph), PUT replaces, POST merges (through the delta, like
+  *   `/update`), DELETE drops. Payload formats:
   *   N-Triples, Turtle, or JSON-LD by Content-Type.
   *
   * All contexts answer OPTIONS with their Allow set; HEAD mirrors the
@@ -502,7 +508,8 @@ final class SparqlServer(initial: GraftStore, port: Int = 0,
             .getOrElse("")
           respondGraph(ex, accept, existing.select("s", "p", "o"))
         }
-      // writes rebuild the store around the transformed quad table;
+      // PUT and DELETE rebuild the store around the transformed quad
+      // table, POST merges through the store's delta (as INSERT DATA);
       // the empty-graph registry rides along (a GSP write must not
       // wipe CREATEd/CLEARed graphs), PUT/POST register their target
       // graph (GSP §5.3/§5.5: a request to a non-existent graph
@@ -520,10 +527,8 @@ final class SparqlServer(initial: GraftStore, port: Int = 0,
       case "POST" =>
         val triples = parseBody(ex, graph)
         updateLock.synchronized {
-          val cur = ref.get
-          ref.set(GraftStore(
-            cur.quads.unionByName(triples).distinct(),
-            cur.emptyGraphs ++ graph))
+          val merged = ref.get.extend(triples)
+          ref.set(graph.fold(merged)(merged.insertNamedGraph))
         }
         respond(ex, 204, "", "text/plain")
       case "DELETE" =>

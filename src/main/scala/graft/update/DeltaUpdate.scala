@@ -4,22 +4,30 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.algebra.Algebra._
+import graft.exec.{QueryExec, Translator}
 import graft.io.PartitionedQuadStore
 import graft.model.Term
 
-/** Partition-delta SPARQL Update over a SAVED predicate-partitioned
-  * store (SURVEY §2.10 at scale): instead of materializing the whole
-  * transformed quad table and rewriting every partition —
-  * O(store size) per update, the 100× leg's pq11 cost — express the
-  * update as a (deletes, inserts) quad delta and rewrite ONLY the
-  * partition directories the delta touches: O(changed partitions).
+/** The (deletes, inserts) factorization of SPARQL Update, and the
+  * partition-delta update of a SAVED predicate-partitioned store
+  * (SURVEY §2.10 at scale).
   *
-  * The full-rebuild semantics `((store ∖ D) ∪ I) distinct` factor
-  * per partition because the partition key (`p_key`, the predicate
-  * local name) is a pure function of the quad row: a quad in D/I can
-  * only ever add to or remove from its own key's directory, so every
-  * untouched directory is byte-identical before and after — it is
-  * skipped, not rewritten.
+  * [[delta]] is the one update model. Three callers consume it:
+  *  - [[UpdateExec.apply]] folds it into a quad table as
+  *    `((store ∖ D) ∪ I) distinct` (the full rebuild);
+  *  - [[graft.GraftStore]] collects it (at most
+  *    [[graft.ops.Skew.BroadcastRowGate]] rows) and composes it into
+  *    the store's driver-side insert/delete delta, so reads see
+  *    `(base ▷ (I ∪ D)) ∪ I` however many writes came before;
+  *  - [[updateInPlace]] rewrites only the partition directories the
+  *    delta touches: O(changed partitions), not O(store size) — the
+  *    100× leg's pq11 cost.
+  *
+  * The full-rebuild semantics factor per partition because the
+  * partition key (`p_key`, the predicate local name) is a pure
+  * function of the quad row: a quad in D/I can only ever add to or
+  * remove from its own key's directory, so every untouched directory
+  * is byte-identical before and after — it is skipped, not rewritten.
   *
   * Delta-shaped ops: INSERT/DELETE DATA, DELETE/INSERT WHERE (incl.
   * WITH/USING), LOAD, ADD (insert-only deltas). Graph management that
@@ -28,7 +36,7 @@ import graft.model.Term
   * partitions by construction. CREATE is registry-only (no quad
   * effect at all).
   *
-  * Mechanics per op:
+  * Mechanics per op of [[updateInPlace]]:
   *  1. materialize the delta (`localCheckpoint`) BEFORE any write —
   *     the delta's WHERE pattern reads the very files being replaced;
   *  2. affected keys = distinct `p_key` over D ∪ I (metadata-scale:
@@ -41,8 +49,9 @@ import graft.model.Term
   */
 object DeltaUpdate {
 
-  /** The op as a (deletes, inserts) pair, or None when it has no
-    * bounded-partition delta shape. Neither side is materialized here.
+  /** The op as a (deletes, inserts) pair, both evaluated against the
+    * pre-state `quads`, or None when it has no bounded-partition delta
+    * shape. Neither side is materialized here.
     */
   def delta(op: UpdateOp, quads: DataFrame)
       : Option[(Option[DataFrame], Option[DataFrame])] = op match {
@@ -51,35 +60,23 @@ object DeltaUpdate {
     case DeleteData(qs) =>
       Some((Some(UpdateExec.constQuads(quads, qs)), None))
     case DeleteInsert(del, ins, where, using, usingNamed, _) =>
+      // USING builds the match dataset like FROM does for queries; the
+      // delete/insert effects still apply to the FULL store
       val matchQuads =
         if (using.isEmpty && usingNamed.isEmpty) quads
-        else graft.exec.QueryExec.applyDataset(quads, using, usingNamed)
-      val d = if (del.isEmpty) None
-        else Some(UpdateExec.templQuads(del, where, matchQuads))
-      val i = if (ins.isEmpty) None
-        else Some(UpdateExec.templQuads(ins, where, matchQuads))
-      Some((d, i))
+        else QueryExec.applyDataset(quads, using, usingNamed)
+      // one translation of the WHERE feeds both templates
+      val sol = Translator.translate(where, matchQuads)
+      def side(t: Seq[(TermPat, TriplePattern)]) =
+        if (t.isEmpty) None else Some(QueryExec.instantiateQuads(t, sol))
+      Some((side(del), side(ins)))
     case LoadGraph(source, into) =>
       val fmt = source.substring(source.lastIndexOf('.') + 1)
       val loaded = graft.io.RdfIO.read(quads.sparkSession, source, fmt)
-      val g = into match {
-        case None => Term.defaultGraph
-        case Some(iri) => Term.iri(iri)
-      }
-      Some((None,
-        Some(loaded.select(g.as("g"), col("s"), col("p"), col("o")))))
+      Some((None, Some(loaded.select(UpdateExec.graphCol(into).as("g"),
+        col("s"), col("p"), col("o")))))
     case AddGraph(f, t) if f != t =>
-      val src = f match {
-        case None => col("g")("kind") === Term.DefaultGraphKind
-        case Some(iri) => col("g")("kind") === Term.IriKind &&
-          col("g")("lex") === iri
-      }
-      val tgt = t match {
-        case None => Term.defaultGraph
-        case Some(iri) => Term.iri(iri)
-      }
-      Some((None, Some(quads.where(src)
-        .select(tgt.as("g"), col("s"), col("p"), col("o")))))
+      Some((None, Some(UpdateExec.retarget(quads, f, t))))
     case CreateGraph(_) | AddGraph(_, _) => Some((None, None))
     case _ => None // CLEAR/DROP/COPY/MOVE: whole-graph deletes
   }
@@ -91,7 +88,7 @@ object DeltaUpdate {
   /** Rewrite only the partitions of the store at `path` that the
     * (deletes, inserts) delta touches.
     */
-  private def applyDelta(spark: SparkSession, path: String,
+  private def rewritePartitions(spark: SparkSession, path: String,
       del: Option[DataFrame], ins: Option[DataFrame]): Unit = {
     // pin the delta: its lineage reads the files about to be replaced
     val d = del.map(_.localCheckpoint(true))
@@ -106,9 +103,7 @@ object DeltaUpdate {
     val stored = spark.read.parquet(path)
       .where(col("p_key").isin(affected.toSeq: _*))
       .select(col("g"), col("s"), col("p"), col("o"))
-    var next = stored
-    d.foreach(x => next = next.except(x))
-    i.foreach(x => next = next.unionByName(x).distinct())
+    val next = UpdateExec.applyDelta(stored, d, i)
     // pin the rebuilt rows too (same self-overwrite reason), then write
     // only the affected directories
     val pinned = next.localCheckpoint(true)
@@ -141,7 +136,7 @@ object DeltaUpdate {
       val g2 = UpdateExec.graphsAfter(op, store.quads, store.emptyGraphs)
       delta(op, store.quads) match {
         case Some((d, i)) =>
-          applyDelta(spark, path, d, i)
+          rewritePartitions(spark, path, d, i)
           if (g2 != store.emptyGraphs) writeSidecar(spark, path, g2)
         case None =>
           // full rebuild: pin before save (save overwrites its input)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.model.Term
 import graft.algebra.Algebra._
-import graft.exec.{QueryExec, Translator}
 
 /** SPARQL Update as batch quad-table transformations (SURVEY.md §2.10;
   * oxigraph: lib/spargebra/src/update.rs · GraphUpdateOperation,
@@ -14,33 +13,23 @@ import graft.exec.{QueryExec, Translator}
   */
 object UpdateExec {
 
-  private[update] def templQuads(template: Seq[(TermPat, TriplePattern)],
-      where: GraphPattern, quads: DataFrame): DataFrame =
-    QueryExec.instantiateQuads(template,
-      Translator.translate(where, quads))
-
   /** Parse and apply a SPARQL Update string (possibly `;`-chained). */
   def executeText(update: String, quads: DataFrame): DataFrame =
     graft.parser.SparqlParser.parseUpdateText(update)
       .foldLeft(quads)((q, op) => apply(op, q))
 
-  /** Quad effect plus the named-graph-registry effect (oxigraph:
-    * lib/oxigraph/src/storage · named graph set; Store::insert_named_graph).
-    * `graphs` holds graphs that exist while possibly empty — explicitly
-    * CREATEd, or left behind by CLEAR — and is metadata-scale (graph
-    * names only, like the predicate catalog). Graphs that hold quads are
-    * implicit and never need registering; DROP removes both quads and
-    * the registry entry, CLEAR removes quads but keeps the graph alive.
-    * SILENT-tolerant by design: CREATE of an existing graph and
-    * CLEAR/DROP of an absent one are no-ops, not errors.
-    */
-  def applyWithGraphs(op: UpdateOp, quads: DataFrame,
-      graphs: Set[String]): (DataFrame, Set[String]) =
-    (apply(op, quads), graphsAfter(op, quads, graphs))
-
-  /** The registry effect alone (shared by the full-rebuild path above
-    * and the partition-delta path in [[DeltaUpdate]], which must not
-    * materialize the transformed quad table just to learn it).
+  /** The named-graph-registry effect of an op (oxigraph:
+    * lib/oxigraph/src/storage · named graph set; Store::insert_named_graph),
+    * shared by [[graft.GraftStore]] and the partition-delta path in
+    * [[DeltaUpdate]], which must not materialize the transformed quad
+    * table just to learn it. `graphs` holds graphs that exist while
+    * possibly empty — explicitly CREATEd, or left behind by CLEAR — and
+    * is metadata-scale (graph names only, like the predicate catalog).
+    * Graphs that hold quads are implicit and never need registering;
+    * DROP removes both quads and the registry entry, CLEAR removes quads
+    * but keeps the graph alive. SILENT-tolerant by design: CREATE of an
+    * existing graph and CLEAR/DROP of an absent one are no-ops, not
+    * errors.
     */
   def graphsAfter(op: UpdateOp, quads: DataFrame,
       graphs: Set[String]): Set[String] = {
@@ -66,57 +55,46 @@ object UpdateExec {
     }
   }
 
-  def apply(op: UpdateOp, quads: DataFrame): DataFrame = op match {
-    case DeleteInsert(del, ins, where, using, usingNamed, _) =>
-      // USING builds the match dataset like FROM does for queries; the
-      // delete/insert effects still apply to the FULL store
-      val matchQuads =
-        if (using.isEmpty && usingNamed.isEmpty) quads
-        else QueryExec.applyDataset(quads, using, usingNamed)
-      val deletes =
-        if (del.isEmpty) null else templQuads(del, where, matchQuads)
-      val inserts =
-        if (ins.isEmpty) null else templQuads(ins, where, matchQuads)
-      var out = quads
-      if (deletes != null) out = out.except(deletes)
-      if (inserts != null) out = out.unionByName(inserts).distinct()
-      out
+  /** The op's effect on a quad table. Delta-shaped ops (see
+    * [[DeltaUpdate.delta]]) fold their (deletes, inserts) pair in with
+    * [[applyDelta]]; graph management retargets the `g` column.
+    */
+  def apply(op: UpdateOp, quads: DataFrame): DataFrame =
+    DeltaUpdate.delta(op, quads) match {
+      case Some((d, i)) => applyDelta(quads, d, i)
+      case None => op match {
+        case ClearGraph(None) =>
+          quads.where(col("g")("kind") =!= Term.DefaultGraphKind)
+        case ClearGraph(Some(iri)) =>
+          quads.where(!(col("g")("kind") === Term.IriKind &&
+            col("g")("lex") === iri))
+        // DROP has the same quad effect as CLEAR; the registry difference
+        // (DROP unregisters, CLEAR leaves an empty graph) lives in
+        // graphsAfter.
+        case DropGraph(g) => apply(ClearGraph(g), quads)
+        case ClearNamed | DropNamed =>
+          quads.where(col("g")("kind") === Term.DefaultGraphKind)
+        case ClearAll | DropAll => quads.limit(0)
+        // graph management: pure relational retargeting of the g column
+        case CopyGraph(f, t) =>
+          if (f == t) quads
+          else quads.where(!graphFilter(t)).unionByName(retarget(quads, f, t))
+        case MoveGraph(f, t) =>
+          if (f == t) quads
+          else quads.where(!graphFilter(t) && !graphFilter(f))
+            .unionByName(retarget(quads, f, t))
+        case other => throw new IllegalArgumentException(
+          s"no quad effect defined for $other")
+      }
+    }
 
-    case ClearGraph(None) =>
-      quads.where(col("g")("kind") =!= Term.DefaultGraphKind)
-    case ClearGraph(Some(iri)) =>
-      quads.where(!(col("g")("kind") === Term.IriKind &&
-        col("g")("lex") === iri))
-    // DROP has the same quad effect as CLEAR; the registry difference
-    // (DROP unregisters, CLEAR leaves an empty graph) lives in
-    // applyWithGraphs / GraftStore.
-    case DropGraph(g) => apply(ClearGraph(g), quads)
-    case ClearNamed | DropNamed =>
-      quads.where(col("g")("kind") === Term.DefaultGraphKind)
-    case ClearAll | DropAll => quads.limit(0)
-
-    case InsertData(qs) =>
-      quads.unionByName(constQuads(quads, qs)).distinct()
-    case DeleteData(qs) =>
-      quads.except(constQuads(quads, qs))
-
-    // graph management: pure relational retargeting of the g column
-    case CopyGraph(f, t) =>
-      if (f == t) quads
-      else quads.where(!graphFilter(t)).unionByName(retarget(quads, f, t))
-    case MoveGraph(f, t) =>
-      if (f == t) quads
-      else quads.where(!graphFilter(t) && !graphFilter(f))
-        .unionByName(retarget(quads, f, t))
-    case AddGraph(f, t) =>
-      if (f == t) quads
-      else quads.unionByName(retarget(quads, f, t)).distinct()
-    case LoadGraph(source, into) =>
-      val fmt = source.substring(source.lastIndexOf('.') + 1)
-      val loaded = graft.io.RdfIO.read(quads.sparkSession, source, fmt)
-        .select(graphCol(into).as("g"), col("s"), col("p"), col("o"))
-      quads.unionByName(loaded).distinct()
-    case CreateGraph(_) => quads // empty graphs are implicit in a quad table
+  /** The full-rebuild fold of a (deletes, inserts) delta:
+    * `((quads ∖ D) ∪ I)` as a set, deletes before inserts (§3.1.3).
+    */
+  def applyDelta(quads: DataFrame, deletes: Option[DataFrame],
+      inserts: Option[DataFrame]): DataFrame = {
+    val kept = deletes.fold(quads)(quads.except)
+    inserts.fold(kept)(kept.unionByName(_).distinct())
   }
 
   private def graphFilter(g: Option[String]): Column = g match {
@@ -124,11 +102,11 @@ object UpdateExec {
     case Some(iri) =>
       col("g")("kind") === Term.IriKind && col("g")("lex") === iri
   }
-  private def graphCol(g: Option[String]): Column = g match {
+  private[update] def graphCol(g: Option[String]): Column = g match {
     case None => Term.defaultGraph
     case Some(iri) => Term.iri(iri)
   }
-  private def retarget(quads: DataFrame, f: Option[String],
+  private[update] def retarget(quads: DataFrame, f: Option[String],
       t: Option[String]): DataFrame =
     quads.where(graphFilter(f))
       .select(graphCol(t).as("g"), col("s"), col("p"), col("o"))
@@ -171,9 +149,12 @@ object UpdateExec {
       case I(iri) => Term.iri(iri)
       case _ => Term.defaultGraph
     }
-    qs.map { case (graph, t) =>
-      quads.sparkSession.range(1).select(
-        g(graph).as("g"), c(t.s).as("s"), c(t.p).as("p"), c(t.o).as("o"))
-    }.reduce(_ unionByName _)
+    // one single-partition row expanded by one projection: the plan is
+    // analyzed once, not once per quad plus a union per quad
+    quads.sparkSession.range(0, 1, 1, 1).select(inline(array(qs.map {
+      case (graph, t) =>
+        struct(g(graph).as("g"), c(t.s).as("s"), c(t.p).as("p"),
+          c(t.o).as("o"))
+    }: _*)))
   }
 }

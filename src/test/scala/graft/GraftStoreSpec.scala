@@ -141,6 +141,135 @@ class GraftStoreSpec extends AnyFunSuite {
       got.emptyGraphs("http://x/g9"))
   }
 
+  // ---- base + bounded delta ---------------------------------------------
+
+  private val Xsd = "http://www.w3.org/2001/XMLSchema#integer"
+
+  /** 20 customers: segment, nation and balance facts. */
+  private def starStore(): GraftStore = {
+    val nt = tmpDir().resolve("star.nt")
+    Files.writeString(nt, (0 until 20).map { i =>
+      val seg = if (i % 2 == 0) "BUILDING" else "AUTO"
+      s"""<http://x/c$i> <http://x/seg> "$seg" .
+         |<http://x/c$i> <http://x/inNation> <http://x/n${i % 3}> .
+         |<http://x/c$i> <http://x/bal> "$i"^^<$Xsd> .""".stripMargin
+    }.mkString("", "\n", "\n"))
+    GraftStore.fromFile(spark, nt.toString, "nt")
+  }
+
+  private val starProbe =
+    """SELECT ?c ?bal WHERE { ?c <http://x/seg> "BUILDING" ;
+      |  <http://x/inNation> <http://x/n1> ; <http://x/bal> ?bal }""".stripMargin
+
+  private def planNodes(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.collectWithSubqueries { case p => p }
+      .size
+
+  private def canon(q: org.apache.spark.sql.DataFrame): Seq[String] =
+    q.select(concat_ws("|",
+      col("g")("kind"), col("g")("lex"), col("s")("kind"), col("s")("lex"),
+      col("p")("lex"), col("o")("kind"), col("o")("lex"),
+      coalesce(col("o")("dt"), lit("")), coalesce(col("o")("lang"), lit("")))
+      .as("v")).collect().map(_.getString(0)).sorted.toSeq
+
+  /** The same updates folded through the full-rebuild path. */
+  private def rebuilt(st: GraftStore, updates: Seq[String]): Seq[String] =
+    canon(updates.foldLeft(st.quads)((q, u) =>
+      graft.update.UpdateExec.executeText(u, q)))
+
+  test("a star read plans the same overlay after 1 and after 10 " +
+      "INSERT/DELETE DATA writes") {
+    // customers 4, 10 and 16 are BUILDING in nation n1
+    def write(k: Int): String =
+      if (k % 2 == 1)
+        s"""INSERT DATA { <http://x/new$k> <http://x/seg> "BUILDING" ;
+           |  <http://x/inNation> <http://x/n1> ;
+           |  <http://x/bal> "${100 + k}"^^<$Xsd> }""".stripMargin
+      else {
+        val c = Seq(4, 10, 16, 4, 10)(k / 2 - 1)
+        s"""DELETE DATA { <http://x/c$c> <http://x/bal> "$c"^^<$Xsd> }"""
+      }
+    val st0 = starStore()
+    val after = (1 to 10).scanLeft(st0)((st, k) => st.update(write(k)))
+    val n1 = planNodes(after(1).query(starProbe))
+    val n10 = planNodes(after(10).query(starProbe))
+    assert(n1 == n10, s"plan grew with writes: $n1 nodes -> $n10")
+    val got = after(10).query(starProbe)
+      .select(col("c")("lex")).collect().map(_.getString(0)).toSet
+    assert(got == Set(1, 3, 5, 7, 9).map(k => s"http://x/new$k"))
+    // 5 inserts of 3 quads, 3 distinct deleted balances
+    assert(after(10).deltaRows == 18)
+    assert(canon(after(10).quads) == rebuilt(st0, (1 to 10).map(write)))
+  }
+
+  test("delta composition matches the full-rebuild fold") {
+    val st0 = sampleStore()
+    val cases = Seq(
+      // insert an existing quad: no duplicate appears
+      Seq("INSERT DATA { <http://x/a> <http://x/p> <http://x/b> }"),
+      // delete an absent quad: nothing changes
+      Seq("DELETE DATA { <http://x/zz> <http://x/p> <http://x/b> }"),
+      // insert -> delete -> re-insert: present exactly once
+      Seq("INSERT DATA { <http://x/n> <http://x/p> \"v\" }",
+        "DELETE DATA { <http://x/n> <http://x/p> \"v\" }",
+        "INSERT DATA { <http://x/n> <http://x/p> \"v\" }"),
+      // delete a base quad, then put it back
+      Seq("DELETE DATA { <http://x/a> <http://x/name> \"alpha\" }",
+        "INSERT DATA { <http://x/a> <http://x/name> \"alpha\" }"),
+      // GRAPH-targeted data, in and out of a named graph
+      Seq("""INSERT DATA { GRAPH <urn:g:d> { <http://x/a> <http://x/p> <http://x/b> .
+            |  <http://x/q> <http://x/p> "w" } }""".stripMargin,
+        "DELETE DATA { GRAPH <urn:g:d> { <http://x/q> <http://x/p> \"w\" } }"),
+      // pattern writes against the pre-state, chained with `;`
+      Seq("""DELETE { ?s <http://x/p> ?o } INSERT { ?o <http://x/back> ?s }
+            |WHERE { ?s <http://x/p> ?o } ;
+            |INSERT { ?s <http://x/seen> "y" } WHERE { ?s <http://x/back> ?o }"""
+        .stripMargin))
+    cases.foreach { ups =>
+      val st = ups.foldLeft(st0)(_ update _)
+      val got = canon(st.quads)
+      assert(got == rebuilt(st0, ups), ups.mkString(" ; "))
+      assert(got.distinct == got, s"duplicate quads after $ups")
+    }
+    val g = Seq(cases(4).head).foldLeft(st0)(_ update _)
+    assert(g.namedGraphs == Seq("urn:g:d") && g.deltaRows == 2)
+  }
+
+  test("INSERT DATA mints fresh bnodes per request, shared within one") {
+    val ins = "INSERT DATA { _:b <http://x/k> \"v\" . _:b <http://x/k2> \"w\" }"
+    val st = sampleStore().update(ins).update(ins)
+    val subjects = st.quads.where(col("s")("kind") === Term.BlankKind)
+      .select(col("s")("lex"), col("p")("lex")).collect()
+      .map(r => r.getString(0) -> r.getString(1))
+    assert(subjects.length == 4)
+    val bySubject = subjects.groupBy(_._1)
+    assert(bySubject.size == 2 && bySubject.values.forall(_.length == 2))
+    // the delta holds the bnodes it minted: a re-read sees the same ones
+    val again = st.quads.where(col("s")("kind") === Term.BlankKind)
+      .select(col("s")("lex")).collect().map(_.getString(0)).toSet
+    assert(again == bySubject.keySet)
+  }
+
+  test("a delta past the row gate folds into a new base") {
+    val gate = graft.ops.Skew.BroadcastRowGate
+    val rows = spark.range(gate + 10).select(
+      Term.defaultGraph.as("g"),
+      Term.iri(concat(lit("http://x/big/"), col("id").cast("string")))
+        .as("s"),
+      Term.iri(lit("http://x/big")).as("p"),
+      Term.iri(lit("http://x/o")).as("o"))
+    val st0 = sampleStore()
+    val big = st0.extend(rows)
+    assert(big.deltaRows == 0 && big.size == gate + 13)
+    // a small write after the fold composes into a fresh delta again
+    val next = big.update(
+      "DELETE WHERE { ?s <http://x/big> ?o } ; " +
+        "INSERT DATA { <http://x/a> <http://x/q> \"z\" }")
+    assert(next.deltaRows == 1 && next.size == 4)
+    val sm = st0.update("INSERT DATA { <http://x/a> <http://x/q> \"z\" }")
+    assert(canon(next.quads) == canon(sm.quads))
+  }
+
   test("quadsForPattern bound-prefix scan") {
     val st = sampleStore()
     assert(st.quadsForPattern(s = Some(I("http://x/a"))).count() == 2)

@@ -471,6 +471,58 @@ class SparqlServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("pattern writes compose into the store's delta: a star read " +
+      "plans the same after 1 and after 3 DELETE/INSERT WHERE writes") {
+    val d = Files.createTempDirectory("delta")
+    val nt = d.resolve("star.nt")
+    // 20 customers; BUILDING when even, nation n(i % 3), balance i
+    Files.writeString(nt, (0 until 20).map { i =>
+      val seg = if (i % 2 == 0) "BUILDING" else "AUTO"
+      s"""<http://x/c$i> <http://x/seg> "$seg" .
+         |<http://x/c$i> <http://x/inNation> <http://x/n${i % 3}> .
+         |<http://x/c$i> <http://x/bal> "$i"^^<http://www.w3.org/2001/XMLSchema#integer> ."""
+        .stripMargin
+    }.mkString("", "\n", "\n"))
+    val srv = new SparqlServer(
+      GraftStore.fromFile(spark, nt.toString, "nt")).start()
+    val probe =
+      """SELECT ?c ?bal WHERE { ?c <http://x/seg> "BUILDING" ;
+        |  <http://x/inNation> <http://x/n1> ; <http://x/bal> ?bal }"""
+        .stripMargin
+    def post(path: String, ct: String, body: String): Int =
+      client.send(HttpRequest.newBuilder(URI.create(srv.uri(path)))
+        .header("Content-Type", ct).POST(BodyPublishers.ofString(body))
+        .build(), BodyHandlers.ofString()).statusCode()
+    // move AUTO customer k of nation n1 to BUILDING
+    def move(k: Int): Int = post("/update", "application/sparql-update",
+      s"""DELETE { ?c <http://x/seg> "AUTO" }
+         |INSERT { ?c <http://x/seg> "BUILDING" }
+         |WHERE { ?c <http://x/seg> "AUTO" ; <http://x/inNation> <http://x/n1> ;
+         |  <http://x/bal> ?b . FILTER(?b = $k) }""".stripMargin)
+    def nodes: Int = srv.store.query(probe).queryExecution.optimizedPlan
+      .collectWithSubqueries { case p => p }.size
+    def answer: Set[String] = {
+      val body = client.send(HttpRequest.newBuilder(URI.create(
+        srv.uri(s"/query?query=${enc(probe)}"))).GET().build(),
+        BodyHandlers.ofString()).body()
+      "http://x/c[0-9]+".r.findAllIn(body).toSet
+    }
+    try {
+      assert(answer == Set(4, 10, 16).map(i => s"http://x/c$i"))
+      assert(move(1) == 204)
+      val n1 = nodes
+      assert(move(7) == 204 && move(13) == 204)
+      assert(nodes == n1, s"plan grew with writes: $n1 nodes -> $nodes")
+      assert(answer == Set(1, 4, 7, 10, 13, 16).map(i => s"http://x/c$i"))
+      assert(srv.store.deltaRows == 6)
+      // a GSP POST merge takes the same delta path
+      assert(post("/store?default", "application/n-triples",
+        """<http://x/c19> <http://x/seg> "BUILDING" .""" + "\n") == 204)
+      assert(srv.store.deltaRows == 7 && nodes == n1)
+      assert(answer.contains("http://x/c19"))
+    } finally srv.stop()
+  }
+
   test("graph dumps stream: a multi-partition graph round-trips " +
     "chunked (no Content-Length) in NT and Turtle") {
     import spark.implicits._
