@@ -1,10 +1,13 @@
 package graft.exec
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.model.Term
 import graft.algebra.Algebra._
-import graft.io.QuadSource
+import graft.io.{Fetch, QuadSource}
+import graft.ops.Skew
 import Translator.{DefaultG, FixedG, GraphCtx, VarG}
 
 /** Property-path evaluation (SURVEY.md §2.7).
@@ -12,11 +15,21 @@ import Translator.{DefaultG, FixedG, GraphCtx, VarG}
   * Mirrors the semantics of the reference's PathEvaluator (oxigraph:
   * lib/spareval/src/eval.rs · PathEvaluator; SPARQL 1.1 §9.1 ALP with
   * visited-set, i.e. SET semantics for closures) — realized as relational
-  * composition plus a distributed semi-naive fixpoint for `+`/`*`:
-  * each iteration joins the frontier against the (reused, cached) edge
-  * relation, removes already-seen pairs, and localCheckpoints to cut the
-  * lineage — the pattern that survives scale-up (bounded lineage, AQE-
-  * planned joins, no driver-side data movement beyond an empty-check).
+  * composition plus a semi-naive fixpoint for `+`/`*`.
+  *
+  * The fixpoint is size-gated by [[graft.ops.Skew.BroadcastRowGate]], the
+  * rule that gates every forced broadcast. The edges are read first with
+  * `limit(gate + 1)` (one job — the one the checkpoint below would run);
+  * when the edges, the seeds and the growing result all stay within the
+  * gate, the rounds run on the driver, the way the reference evaluates an
+  * ALP closure in memory from its start node. Past the gate it is the
+  * distributed loop: each iteration joins the frontier against the
+  * (reused, cached) edge relation, removes already-seen pairs, and
+  * localCheckpoints to cut the lineage — the pattern that survives
+  * scale-up (bounded lineage, AQE-planned joins, no driver-side data
+  * movement beyond an empty-check).
+  * Small closures thus cost a couple of jobs during translation instead
+  * of two per round.
   *
   * Closures are SEEDED whenever an endpoint is known (the reference's
   * ALP-from-node shape): a bound subject/object — either a query constant
@@ -78,6 +91,10 @@ object PathExec {
   def eval(path: Path, src: QuadSource, ctx: GraphCtx): DataFrame =
     eval(path, src, ctx, None, None)
 
+  def eval(path: Path, src: QuadSource, ctx: GraphCtx,
+      sSeed: Option[Seed], oSeed: Option[Seed]): DataFrame =
+    eval(path, src, ctx, sSeed, oSeed, Skew.BroadcastRowGate)
+
   /** Evaluate a path over the quad table -> DataFrame("pg", "ps", "po")
     * of (graph, connected term pair) rows. SET semantics per graph
     * (distinct rows). Path semantics are PER GRAPH (§18.1.7: GRAPH ?g
@@ -87,9 +104,12 @@ object PathExec {
     * key is a no-op. Seeds restrict closures/zero-length steps only;
     * plain links rely on Catalyst filter pushdown (constants) and the
     * enclosing equi-join (variables), which already reach the scans.
+    * `gate` bounds the closures solved on the driver (the tests force
+    * the distributed loop with 0).
     */
-  def eval(path: Path, src: QuadSource, ctx: GraphCtx,
-      sSeed: Option[Seed], oSeed: Option[Seed]): DataFrame = path match {
+  private[graft] def eval(path: Path, src: QuadSource, ctx: GraphCtx,
+      sSeed: Option[Seed], oSeed: Option[Seed],
+      gate: Long): DataFrame = path match {
     case PLink(iri) =>
       // constant scopes attach their graph term as a literal: the scan
       // then materializes only (s, o) — g is filter-only, not read out
@@ -98,7 +118,7 @@ object PathExec {
           col("s").as("ps"), col("o").as("po"))
 
     case PInv(p) =>
-      eval(p, src, ctx, oSeed, sSeed)
+      eval(p, src, ctx, oSeed, sSeed, gate)
         .select(col("pg"), col("po").as("ps"), col("ps").as("po"))
 
     case PSeq(a, b) =>
@@ -107,28 +127,28 @@ object PathExec {
         // Seeds carry VALUES only (not graphs): a value reachable in one
         // graph may seed another graph's closure too — harmless, the
         // composition join below enforces same-graph.
-        val l = eval(a, src, ctx, sSeed, None)
+        val l = eval(a, src, ctx, sSeed, None, gate)
           .select(col("pg"), col("ps"), col("po").as("mid"))
         val rSeed =
           if (hasClosure(b))
             Some(Seed(l.select(col("mid").as("n")).distinct(),
               zeroIncludesSeed = false))
           else None
-        val r = eval(b, src, ctx, rSeed, oSeed)
+        val r = eval(b, src, ctx, rSeed, oSeed, gate)
           .select(col("pg").as("pg2"), col("ps").as("mid2"), col("po"))
         dedup(l.join(r,
           col("mid") === col("mid2") && col("pg") === col("pg2"))
           .select(col("pg"), col("ps"), col("po")), ctx)
       } else {
         // right-to-left when only the object end is bound
-        val r = eval(b, src, ctx, None, oSeed)
+        val r = eval(b, src, ctx, None, oSeed, gate)
           .select(col("pg").as("pg2"), col("ps").as("mid2"), col("po"))
         val lSeed =
           if (hasClosure(a))
             Some(Seed(r.select(col("mid2").as("n")).distinct(),
               zeroIncludesSeed = false))
           else None
-        val l = eval(a, src, ctx, None, lSeed)
+        val l = eval(a, src, ctx, None, lSeed, gate)
           .select(col("pg"), col("ps"), col("po").as("mid"))
         dedup(l.join(r,
           col("mid") === col("mid2") && col("pg") === col("pg2"))
@@ -138,8 +158,8 @@ object PathExec {
     // §18.4: alt is MULTISET union (a pair connected by both arms
     // appears once per arm) — closures dedupe for themselves
     case PAlt(a, b) =>
-      eval(a, src, ctx, sSeed, oSeed)
-        .union(eval(b, src, ctx, sSeed, oSeed))
+      eval(a, src, ctx, sSeed, oSeed, gate)
+        .union(eval(b, src, ctx, sSeed, oSeed, gate))
 
     case PNeg(iris, invIris) =>
       def nps(excl: Seq[String]): DataFrame =
@@ -158,13 +178,13 @@ object PathExec {
       (fwd.toSeq ++ inv.toSeq).reduce(_ union _)
 
     case PZeroOrOne(p) =>
-      dedup(eval(p, src, ctx, sSeed, oSeed)
+      dedup(eval(p, src, ctx, sSeed, oSeed, gate)
         .union(zeroPairs(src, ctx, sSeed.orElse(oSeed))), ctx)
 
-    case POneOrMore(p) => plusClosure(p, src, ctx, sSeed, oSeed)
+    case POneOrMore(p) => plusClosure(p, src, ctx, sSeed, oSeed, gate)
 
     case PZeroOrMore(p) =>
-      dedup(plusClosure(p, src, ctx, sSeed, oSeed)
+      dedup(plusClosure(p, src, ctx, sSeed, oSeed, gate)
         .union(zeroPairs(src, ctx, sSeed.orElse(oSeed))), ctx)
   }
 
@@ -284,16 +304,14 @@ object PathExec {
     * object seeds) the seed set.
     */
   private def plusClosure(p: Path, src: QuadSource, ctx: GraphCtx,
-      sSeed: Option[Seed], oSeed: Option[Seed]): DataFrame = {
-    val edges = eval(p, src, ctx, None, None).distinct()
+      sSeed: Option[Seed], oSeed: Option[Seed], gate: Long): DataFrame = {
+    val edges = eval(p, src, ctx, None, None, gate)
+    def flip(df: DataFrame) =
+      df.select(col("pg"), col("po").as("ps"), col("ps").as("po"))
     (sSeed, oSeed) match {
-      case (Some(sd), _) => closureFrom(edges, sd.nodes)
-      case (None, Some(od)) =>
-        closureFrom(
-          edges.select(col("pg"), col("po").as("ps"), col("ps").as("po")),
-          od.nodes)
-          .select(col("pg"), col("po").as("ps"), col("ps").as("po"))
-      case _ => closure(edges)
+      case (Some(sd), _) => closureFrom(edges, sd.nodes, gate)
+      case (None, Some(od)) => flip(closureFrom(flip(edges), od.nodes, gate))
+      case _ => closure(edges, gate)
     }
   }
 
@@ -318,27 +336,88 @@ object PathExec {
 
   /** Seeded semi-naive closure: rows (g, s, t) with s in seed and t
     * reachable from s in >= 1 step within graph g. Frontier and result
-    * carry only seed-reachable pairs — O(reachable), not O(V·E).
+    * carry only seed-reachable pairs — O(reachable), not O(V·E). On the
+    * driver within the gate ([[localClosure]]), distributed past it.
     */
-  private def closureFrom(edges0: DataFrame, seed: DataFrame): DataFrame = {
-    val edgesCp = edges0.localCheckpoint(true)
-    val parts = partsFor(edgesCp.count())
-    val edges = edgesCp.coalesce(parts) // narrow view over cached blocks
-    val r0 = seed.select(col("n").as("ps")).distinct()
-      .join(edges, Seq("ps"))
-      .select(col("pg"), col("ps"), col("po")).distinct()
-      .coalesce(parts).localCheckpoint(true)
-    semiNaive(r0, r0.count(), edges, 1, maxIters(edges))
-  }
+  private def closureFrom(edges0: DataFrame, seed: DataFrame,
+      gate: Long): DataFrame =
+    localClosure(edges0, Some(seed), gate).getOrElse {
+      val edgesCp = edges0.distinct().localCheckpoint(true)
+      val parts = partsFor(edgesCp.count())
+      val edges = edgesCp.coalesce(parts) // narrow view over cached blocks
+      val r0 = seed.select(col("n").as("ps")).distinct()
+        .join(edges, Seq("ps"))
+        .select(col("pg"), col("ps"), col("po")).distinct()
+        .coalesce(parts).localCheckpoint(true)
+      semiNaive(r0, r0.count(), edges, 1, maxIters(edges))
+    }
 
-  /** Distributed all-pairs semi-naive closure (both endpoints free),
-    * per graph.
+  /** All-pairs semi-naive closure (both endpoints free), per graph: on
+    * the driver within the gate, distributed past it.
     */
-  private def closure(edges0: DataFrame): DataFrame = {
-    val edgesCp = edges0.localCheckpoint(true)
-    val n = edgesCp.count()
-    val edges = edgesCp.coalesce(partsFor(n)) // narrow view over cache
-    semiNaive(edges, n, edges, 0, maxIters(edges))
+  private def closure(edges0: DataFrame, gate: Long): DataFrame =
+    localClosure(edges0, None, gate).getOrElse {
+      val edgesCp = edges0.distinct().localCheckpoint(true)
+      val n = edgesCp.count()
+      val edges = edgesCp.coalesce(partsFor(n)) // narrow view over cache
+      semiNaive(edges, n, edges, 0, maxIters(edges))
+    }
+
+  /** The closure solved on the driver, when the edges, the seeds and the
+    * growing result all stay within `gate` rows; None (the caller runs
+    * the distributed loop) as soon as one passes it. The edges are read
+    * as they come, duplicates and all (one job; the gate counts them,
+    * the sets drop them). The result is a one-partition RDD-backed
+    * frame with the edges' schema, not a `LocalRelation`: like the
+    * checkpointed result of the distributed loop it carries no size
+    * estimate, so the plans it feeds are optimized and joined as they
+    * were before.
+    */
+  private def localClosure(edges: DataFrame, seed: Option[DataFrame],
+      gate: Long): Option[DataFrame] =
+    for {
+      edgeRows <- Fetch.atMost(edges, gate)
+      seedRows <- seed.fold(Option(Array.empty[Row]))(s =>
+        Fetch.atMost(s.select(col("n")), gate))
+      result <- localSemiNaive(
+        edgeRows.iterator.map(r => (r.getAs[Row]("pg"), r.getAs[Row]("ps"),
+          r.getAs[Row]("po"))).toSet,
+        seed.map(_ => seedRows.iterator.map(_.getStruct(0)).toSet),
+        maxIters(edges), gate)
+    } yield {
+      val spark = edges.sparkSession
+      spark.createDataFrame(spark.sparkContext.parallelize(
+        result.iterator.map { case (g, s, o) => Row(g, s, o) }.toSeq, 1),
+        edges.schema)
+    }
+
+  /** (pg, ps, po) on the driver. */
+  private type Pair = (Row, Row, Row)
+
+  /** [[semiNaive]]'s rounds over driver-side hash sets: the seeded form
+    * (`seeds` defined) starts from the seeds' edges at iteration 1, the
+    * unseeded one from all edges at iteration 0, and the cap raises
+    * under exactly [[semiNaive]]'s condition. None once the result
+    * passes `gate`.
+    */
+  private def localSemiNaive(edges: Set[Pair], seeds: Option[Set[Row]],
+      cap: Int, gate: Long): Option[Iterable[Pair]] = {
+    val next = edges.groupMap(e => (e._1, e._2))(_._3)
+    val result = mutable.LinkedHashSet.empty[Pair]
+    var frontier: Iterable[Pair] =
+      seeds.fold(edges)(ns => edges.filter(e => ns.contains(e._2)))
+    result ++= frontier
+    var i = if (seeds.isDefined) 1 else 0
+    while (i < cap && frontier.nonEmpty && result.size <= gate) {
+      val stepped = mutable.ArrayBuffer.empty[Pair]
+      for ((g, s, m) <- frontier; o <- next.getOrElse((g, m), Nil))
+        if (result.add((g, s, o))) stepped += ((g, s, o))
+      frontier = stepped
+      i += 1
+    }
+    if (result.size > gate) None
+    else if (i >= cap && frontier.nonEmpty) raiseCap(cap)
+    else Some(result)
   }
 
   /** The shared semi-naive loop. The RESULT is kept as a lazy union of

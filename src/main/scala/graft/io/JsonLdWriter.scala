@@ -108,17 +108,17 @@ object JsonLdWriter {
   }
 
   /** Stream quads as ONE expanded JSON-LD document into `out` —
-    * node objects are independent, so the document streams one
-    * partition at a time through `toLocalIterator` (the protocol dump
-    * path for datasets too large to hold driver-side).
+    * node objects are independent, so the document streams through
+    * [[Fetch.rows]]: one job while the document is within the row gate
+    * ([[graft.ops.Skew.BroadcastRowGate]] node objects), one partition
+    * at a time past it (the protocol dump path for datasets too large
+    * to hold driver-side).
     */
   def writeJsonLd(quads: DataFrame, out: Appendable,
       rdfDirection: Option[String] = None): Unit = {
-    import scala.jdk.CollectionConverters._
-    val it = quads.select(
+    val it = Fetch.rows(quads.select(
       quadObject(col("g"), col("s"), col("p"), col("o"), rdfDirection)
-        .as("value"))
-      .toLocalIterator().asScala
+        .as("value")))
     out.append('[')
     var first = true
     it.foreach { r =>

@@ -87,8 +87,9 @@ object Results {
     val sb = new java.lang.StringBuilder; writeJson(solutions, sb); sb.toString
   }
 
-  /** JSON results streamed into `out` one partition at a time —
-    * the endpoint path never holds the whole document driver-side.
+  /** JSON results streamed into `out` through [[Fetch.rows]] (one job
+    * for a result within the row gate, one partition at a time past
+    * it) — the endpoint path never holds the whole document driver-side.
     */
   def writeJson(solutions: DataFrame, out: Appendable): Unit = {
     askValue(solutions) match {
@@ -100,7 +101,7 @@ object Results {
     val head = vars.map(v => s""""${jsonEscape(v)}"""").mkString("[", ",", "]")
     out.append(s"""{"head":{"vars":$head},"results":{"bindings":[""")
     var first = true
-    solutions.toLocalIterator().forEachRemaining { row =>
+    Fetch.rows(solutions).foreach { row =>
       val entries = vars.zipWithIndex.flatMap { case (v, i) =>
         Option(row.getAs[Row](i)).map(t => s""""${jsonEscape(v)}":${termJson(t)}""")
       }
@@ -170,7 +171,7 @@ object Results {
     val sep = if (tsv) "\t" else ","
     out.append(
       (if (tsv) vars.map("?" + _) else vars).mkString(sep)).append("\r\n")
-    solutions.toLocalIterator().forEachRemaining { row =>
+    Fetch.rows(solutions).foreach { row =>
       val cells = vars.indices.map { i =>
         Option(row.getAs[Row](i)) match {
           case None => ""
@@ -241,7 +242,7 @@ object Results {
     val sb = new java.lang.StringBuilder; writeXml(solutions, sb); sb.toString
   }
 
-  /** XML results streamed into `out` one partition at a time. */
+  /** XML results streamed into `out` through [[Fetch.rows]]. */
   def writeXml(solutions: DataFrame, out: Appendable): Unit = {
     askValue(solutions) match {
       case Some(b) =>
@@ -256,7 +257,7 @@ object Results {
       """<?xml version="1.0"?><sparql xmlns="http://www.w3.org/2005/sparql-results#" xmlns:its="http://www.w3.org/2005/11/its"><head>""")
     vars.foreach(v => out.append(s"""<variable name="${xmlEscape(v)}"/>"""))
     out.append("</head><results>")
-    solutions.toLocalIterator().forEachRemaining { row =>
+    Fetch.rows(solutions).foreach { row =>
       out.append("<result>")
       vars.zipWithIndex.foreach { case (v, i) =>
         Option(row.getAs[Row](i)).foreach { t =>

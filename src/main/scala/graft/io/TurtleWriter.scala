@@ -192,22 +192,24 @@ object TurtleWriter {
   /** Triples as ONE Turtle document streamed line by line — the
     * protocol dump path for graphs too large to hold driver-side.
     * Range-partitioning on the subject token keeps every subject's run
-    * inside one partition with partitions globally ordered, so
-    * `toLocalIterator` pulls ONE partition at a time and the
-    * concatenation is a single subject-grouped document (the header is
-    * emitted once, driver-side).
+    * inside one partition with partitions globally ordered, and
+    * [[Fetch.rows]] emits partitions in order, so the concatenation is a
+    * single subject-grouped document (the header is emitted once,
+    * driver-side). Within the row gate ([[graft.ops.Skew.BroadcastRowGate]])
+    * the lines arrive in one job; past it, each over-bound partition is
+    * fetched on its own, one resident at a time.
     */
   def turtleLines(triples: DataFrame,
       prefixes: Seq[(String, String)] = DefaultPrefixes)
       : Iterator[String] = {
-    import scala.jdk.CollectionConverters._
     val tok = triples.select(lit("").as("gt"),
       ttlTerm(col("s"), prefixes).as("st"),
       ttlTerm(col("p"), prefixes, predicatePos = true).as("pt"),
       ttlTerm(col("o"), prefixes).as("ot"))
       .repartitionByRange(col("st"))
     header(prefixes).iterator ++
-      lineset(tok, prefixes, withHeader = false).toLocalIterator().asScala
+      Fetch.rows(lineset(tok, prefixes, withHeader = false).toDF())
+        .map(_.getString(0))
   }
 
   /** Serialize quads (g, s, p, o) as TriG — default-graph rows become

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftStore
 import graft.algebra.Algebra._
-import graft.io.{JsonLdWriter, RdfIO, Results, TurtleWriter}
+import graft.io.{Fetch, JsonLdWriter, RdfIO, Results, TurtleWriter}
 import graft.model.Term
 import graft.parser.SparqlParser
 
@@ -23,11 +23,14 @@ import graft.parser.SparqlParser
   * usual ingress).
   *
   * Every response body STREAMS: results and graph documents are
-  * written chunk by chunk from `toLocalIterator`-backed writers, one
-  * Spark partition resident driver-side at a time — a `GET /store` of
-  * an arbitrarily large graph never materializes the document (the
-  * reference streams its dumps the same way). Dataset-scale export to
-  * files still goes through the RdfIO sinks.
+  * written chunk by chunk from writers that pull rows through
+  * [[graft.io.Fetch.rows]]. A result within the row gate
+  * (`Skew.BroadcastRowGate` rows) arrives in ONE Spark job over all
+  * partitions; past it, each partition over its share of the gate is
+  * fetched on its own, one resident driver-side at a time — a
+  * `GET /store` of an arbitrarily large graph never materializes the
+  * document (the reference streams its dumps the same way).
+  * Dataset-scale export to files still goes through the RdfIO sinks.
   *
   * - `GET/POST /query` — `query` via query-string, urlencoded form, or
   *   `application/sparql-query` body; `default-graph-uri` /
@@ -59,8 +62,7 @@ final class SparqlServer(initial: GraftStore, port: Int = 0,
   private val ref = new AtomicReference[GraftStore](initial)
   def store: GraftStore = ref.get
 
-  private val server =
-    HttpServer.create(new InetSocketAddress(host, port), 0)
+  private val server = SparqlServer.bind(new InetSocketAddress(host, port))
   def boundPort: Int = server.getAddress.getPort
   def uri(path: String): String = s"http://$host:$boundPort$path"
 
@@ -241,15 +243,12 @@ final class SparqlServer(initial: GraftStore, port: Int = 0,
   /** Stream triples as N-Triples lines (formatting stays distributed —
     * the concat runs in executors; the driver only relays lines).
     */
-  private def ntStream(triples: DataFrame, out: Appendable): Unit = {
-    import scala.jdk.CollectionConverters._
-    triples.select(concat(
+  private def ntStream(triples: DataFrame, out: Appendable): Unit =
+    Fetch.rows(triples.select(concat(
       RdfIO.formatTerm(col("s")), lit(" "),
       RdfIO.formatTerm(col("p")), lit(" "),
-      RdfIO.formatTerm(col("o")), lit(" .")).as("l"))
-      .toLocalIterator().asScala
+      RdfIO.formatTerm(col("o")), lit(" .")).as("l")))
       .foreach(r => out.append(r.getString(0)).append('\n'))
-  }
 
   // ---- /query ---------------------------------------------------------
 
@@ -560,4 +559,17 @@ final class SparqlServer(initial: GraftStore, port: Int = 0,
 
   def start(): SparqlServer = { server.start(); this }
   def stop(): Unit = server.stop(0)
+}
+
+object SparqlServer {
+  // The JDK server writes a response's headers and its body as separate
+  // small segments. With Nagle's algorithm on, the body waits for the
+  // client to ACK the headers, and a delayed ACK holds every response
+  // back by tens of milliseconds. The JDK reads this property once, when
+  // the first HttpServer of the JVM is created, so it is set here, in
+  // the initializer that runs before [[bind]] creates one.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private def bind(addr: InetSocketAddress): HttpServer =
+    HttpServer.create(addr, 0)
 }

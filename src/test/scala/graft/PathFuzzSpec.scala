@@ -1,14 +1,20 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.TestJobs
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.algebra.Algebra._
+import graft.exec.{PathExec, Translator}
+import graft.io.DfQuadSource
 import graft.model.Term
 
 /** Property-path fuzzing: random directed graphs (with cycles), random
-  * path expressions; the distributed fixpoint/compose evaluation must
-  * equal a naive in-memory closure.
+  * path expressions; the fixpoint/compose evaluation must equal a naive
+  * in-memory closure — on both sides of the closure gate: within it
+  * (the default gate, closures solved on the driver) and past it (gate
+  * 0, the distributed fixpoint).
   */
 class PathFuzzSpec extends AnyFunSuite {
   import TestSpark._
@@ -85,81 +91,121 @@ class PathFuzzSpec extends AnyFunSuite {
       spark.sparkContext.parallelize(rows.toList, 2), Term.quadSchema)
   }
 
-  test("distributed path evaluation equals naive closure on random graphs") {
-    val prop = Prop.forAllNoShrink(genGraph, genPath(2)) { (edges, path) =>
-      val expected = evalNaive(path, edges)
-      val df = graft.exec.Translator.translate(
-        PathPattern(V("x"), path, V("y")), quadsDf(edges)).df
-      val got = df.collect().map { r =>
-        (r.getAs[Row]("x").getString(1), r.getAs[Row]("y").getString(1))
-      }.toSet
-      if (got != expected)
-        println(s"MISMATCH path=$path edges=$edges\nexp=$expected\ngot=$got")
-      got == expected
+  /** A path pattern's solutions the way the translator builds them
+    * (constant endpoints seed the closure and filter the pairs), from
+    * PathExec with closure gate `gate`.
+    */
+  private def viaPathExec(gate: Long)(pat: PathPattern,
+      quads: DataFrame): DataFrame = {
+    val PathPattern(s, path, o) = pat
+    def seed(t: TermPat) = t match {
+      case I(iri) => Some(PathExec.Seed(
+        spark.range(1).select(Term.iri(iri).as("n")), zeroIncludesSeed = true))
+      case _ => None
     }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(
-        sys.env.getOrElse("GRAFT_FUZZ_N", "20").toInt), prop)
-    assert(result.passed, s"path fuzz failed: ${result.status}")
+    val ends = Seq(s -> "ps", o -> "po")
+    val pairs = ends.foldLeft(PathExec.eval(path, DfQuadSource(quads),
+      Translator.DefaultG, seed(s), seed(o), gate)) {
+      case (df, (I(iri), c)) => df.where(col(c)("lex") === iri)
+      case (df, _) => df
+    }
+    pairs.select(ends.collect { case (V(v), c) => col(c).as(v) }: _*)
   }
 
-  test("p+ fixpoint RAISES at the iteration cap instead of truncating") {
-    // diameter > cap: a silent exit here would return an incomplete
-    // closure — a wrong answer with no signal. The cap must be loud.
-    val p = "http://x/p"
-    val chain = (0 until 70).map(i => (node(i), p, node(i + 1)))
-    val quads = quadsDf(chain)
-    val ex = intercept[IllegalStateException] {
-      graft.exec.Translator.translate(
-        PathPattern(V("x"), POneOrMore(PLink(p)), V("y")), quads)
-        .df.count()
-    }
-    assert(ex.getMessage.contains("graft.path.maxIterations"))
-    // seeded variant hits the same cap
-    val ex2 = intercept[IllegalStateException] {
-      graft.exec.Translator.translate(
-        PathPattern(I(node(0)), POneOrMore(PLink(p)), V("y")), quads)
-        .df.count()
-    }
-    assert(ex2.getMessage.contains("did not converge"))
-    // raising the session cap completes the closure exactly
-    spark.conf.set("graft.path.maxIterations", "128")
-    try {
-      val n = graft.exec.Translator.translate(
-        PathPattern(I(node(0)), POneOrMore(PLink(p)), V("y")), quads)
-        .df.count()
-      assert(n == 70, s"expected the full 70-node tail, got $n")
-    } finally spark.conf.unset("graft.path.maxIterations")
-  }
+  private val sides: Seq[(String, (PathPattern, DataFrame) => DataFrame)] =
+    Seq("" -> ((pat, quads) => Translator.translate(pat, quads).df),
+      " (closure gate 0: distributed fixpoint)" -> viaPathExec(0L))
 
-  test("seeded evaluation with a bound endpoint equals filtered naive") {
-    val prop = Prop.forAllNoShrink(genGraph, genPath(2), Gen.choose(0, 6),
-      Gen.oneOf(true, false)) { (edges, path, k, boundSubj) =>
-      val x = node(k)
-      // restrict to in-graph seeds: for off-graph terms the spec's ALP
-      // includes the zero-length self-pair that the naive bottom-up
-      // model (graph terms only) omits — covered by PlansSpec instead
-      if (!allNodes(edges).contains(x)) true
-      else {
-        val expected = evalNaive(path, edges).collect {
-          case (s, o) if (if (boundSubj) s == x else o == x) =>
-            if (boundSubj) o else s
+  for ((side, solve) <- sides) {
+    test("distributed path evaluation equals naive closure on random graphs" +
+        side) {
+      val prop = Prop.forAllNoShrink(genGraph, genPath(2)) { (edges, path) =>
+        val expected = evalNaive(path, edges)
+        val df = solve(PathPattern(V("x"), path, V("y")), quadsDf(edges))
+        val got = df.collect().map { r =>
+          (r.getAs[Row]("x").getString(1), r.getAs[Row]("y").getString(1))
         }.toSet
-        val pat =
-          if (boundSubj) PathPattern(I(x), path, V("v"))
-          else PathPattern(V("v"), path, I(x))
-        val df = graft.exec.Translator.translate(pat, quadsDf(edges)).df
-        val got = df.collect()
-          .map(r => r.getAs[Row]("v").getString(1)).toSet
         if (got != expected)
-          println(s"SEEDED MISMATCH x=$x subj=$boundSubj path=$path " +
-            s"edges=$edges\nexp=$expected\ngot=$got")
+          println(s"MISMATCH path=$path edges=$edges\nexp=$expected\ngot=$got")
         got == expected
       }
+      val result = SCTest.check(
+        SCTest.Parameters.default.withMinSuccessfulTests(
+          sys.env.getOrElse("GRAFT_FUZZ_N", "20").toInt), prop)
+      assert(result.passed, s"path fuzz failed: ${result.status}")
     }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(
-        sys.env.getOrElse("GRAFT_FUZZ_N", "20").toInt), prop)
-    assert(result.passed, s"seeded path fuzz failed: ${result.status}")
+
+    test("p+ fixpoint RAISES at the iteration cap instead of truncating" +
+        side) {
+      // diameter > cap: a silent exit here would return an incomplete
+      // closure — a wrong answer with no signal. The cap must be loud.
+      val p = "http://x/p"
+      val chain = (0 until 70).map(i => (node(i), p, node(i + 1)))
+      val quads = quadsDf(chain)
+      val ex = intercept[IllegalStateException] {
+        solve(PathPattern(V("x"), POneOrMore(PLink(p)), V("y")), quads)
+          .count()
+      }
+      assert(ex.getMessage.contains("graft.path.maxIterations"))
+      // seeded variant hits the same cap
+      val ex2 = intercept[IllegalStateException] {
+        solve(PathPattern(I(node(0)), POneOrMore(PLink(p)), V("y")), quads)
+          .count()
+      }
+      assert(ex2.getMessage.contains("did not converge"))
+      // raising the session cap completes the closure exactly
+      spark.conf.set("graft.path.maxIterations", "128")
+      try {
+        val n = solve(
+          PathPattern(I(node(0)), POneOrMore(PLink(p)), V("y")), quads)
+          .count()
+        assert(n == 70, s"expected the full 70-node tail, got $n")
+      } finally spark.conf.unset("graft.path.maxIterations")
+    }
+
+    test("seeded evaluation with a bound endpoint equals filtered naive" +
+        side) {
+      val prop = Prop.forAllNoShrink(genGraph, genPath(2), Gen.choose(0, 6),
+        Gen.oneOf(true, false)) { (edges, path, k, boundSubj) =>
+        val x = node(k)
+        // restrict to in-graph seeds: for off-graph terms the spec's ALP
+        // includes the zero-length self-pair that the naive bottom-up
+        // model (graph terms only) omits — covered by PlansSpec instead
+        if (!allNodes(edges).contains(x)) true
+        else {
+          val expected = evalNaive(path, edges).collect {
+            case (s, o) if (if (boundSubj) s == x else o == x) =>
+              if (boundSubj) o else s
+          }.toSet
+          val pat =
+            if (boundSubj) PathPattern(I(x), path, V("v"))
+            else PathPattern(V("v"), path, I(x))
+          val df = solve(pat, quadsDf(edges))
+          val got = df.collect()
+            .map(r => r.getAs[Row]("v").getString(1)).toSet
+          if (got != expected)
+            println(s"SEEDED MISMATCH x=$x subj=$boundSubj path=$path " +
+              s"edges=$edges\nexp=$expected\ngot=$got")
+          got == expected
+        }
+      }
+      val result = SCTest.check(
+        SCTest.Parameters.default.withMinSuccessfulTests(
+          sys.env.getOrElse("GRAFT_FUZZ_N", "20").toInt), prop)
+      assert(result.passed, s"seeded path fuzz failed: ${result.status}")
+    }
+  }
+
+  test("a constant-seeded p+ within the closure gate runs at most 3 " +
+      "jobs while translating") {
+    // the distributed fixpoint runs a checkpoint and a count (and their
+    // stages' jobs) per round: hundreds of jobs on this 30-edge chain
+    val p = "http://x/p"
+    val quads = quadsDf((0 until 30).map(i => (node(i), p, node(i + 1))))
+    val (sol, jobs) = TestJobs.count(spark.sparkContext)(
+      Translator.translate(
+        PathPattern(I(node(0)), POneOrMore(PLink(p)), V("y")), quads))
+    assert(jobs <= 3, s"$jobs jobs during translation")
+    assert(sol.df.count() == 30)
   }
 }

@@ -528,8 +528,8 @@ class SparqlServerSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     // 20k triples over 8 partitions — the dump path must never hold
-    // the document driver-side (toLocalIterator pulls one partition
-    // at a time; chunked transfer carries it out)
+    // the document driver-side (Fetch.rows holds at most the row gate's
+    // rows plus one partition; chunked transfer carries it out)
     val quads = spark.range(20000).repartition(8).select(
       graft.model.Term.defaultGraph.as("g"),
       graft.model.Term.iri(concat(lit("http://x/s"), col("id"))).as("s"),
@@ -640,5 +640,19 @@ class SparqlServerSpec extends AnyFunSuite {
       .POST(BodyPublishers.ofString(
         s"update=${enc("CLEAR ALL")}&update=${enc("CLEAR ALL")}")).build())
     assert(dupU.statusCode() == 400)
+  }
+
+  test("responses are not held back by Nagle's algorithm") {
+    // GET /update never reaches Spark: a 405 whose body is written after
+    // the headers. With Nagle on, that second small write waits for the
+    // client's delayed ACK, some 40 ms on Linux, on every response.
+    val ms = (0 until 11).map { _ =>
+      val t0 = System.nanoTime()
+      val r = get("/update")
+      assert(r.statusCode() == 405 && r.body().nonEmpty)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    assert(ms(ms.size / 2) < 20,
+      ms.map(t => f"$t%.1f").mkString("", " ms, ", " ms"))
   }
 }
