@@ -19,11 +19,13 @@ import Translator.{DefaultG, FixedG, GraphCtx, VarG}
   *
   * The fixpoint is size-gated by [[graft.ops.Skew.BroadcastRowGate]], the
   * rule that gates every forced broadcast. The edges are read first with
-  * `limit(gate + 1)` (one job — the one the checkpoint below would run);
+  * `limit(gate + 1)` (one job; within the gate it replaces the checkpoint);
   * when the edges, the seeds and the growing result all stay within the
   * gate, the rounds run on the driver, the way the reference evaluates an
   * ALP closure in memory from its start node. Past the gate it is the
-  * distributed loop: each iteration joins the frontier against the
+  * distributed loop, once the edge read, the seed read and at most
+  * `gate` driver-side pair inserts have found that out (work the loop
+  * does not reuse): each iteration joins the frontier against the
   * (reused, cached) edge relation, removes already-seen pairs, and
   * localCheckpoints to cut the lineage — the pattern that survives
   * scale-up (bounded lineage, AQE-planned joins, no driver-side data
@@ -397,8 +399,9 @@ object PathExec {
   /** [[semiNaive]]'s rounds over driver-side hash sets: the seeded form
     * (`seeds` defined) starts from the seeds' edges at iteration 1, the
     * unseeded one from all edges at iteration 0, and the cap raises
-    * under exactly [[semiNaive]]'s condition. None once the result
-    * passes `gate`.
+    * under exactly [[semiNaive]]'s condition. None as soon as the result
+    * passes `gate` — checked per added pair, not per round: one round
+    * over a hub can add |frontier| × out-degree pairs, far past the gate.
     */
   private def localSemiNaive(edges: Set[Pair], seeds: Option[Set[Row]],
       cap: Int, gate: Long): Option[Iterable[Pair]] = {
@@ -410,8 +413,13 @@ object PathExec {
     var i = if (seeds.isDefined) 1 else 0
     while (i < cap && frontier.nonEmpty && result.size <= gate) {
       val stepped = mutable.ArrayBuffer.empty[Pair]
-      for ((g, s, m) <- frontier; o <- next.getOrElse((g, m), Nil))
-        if (result.add((g, s, o))) stepped += ((g, s, o))
+      val reached = frontier.iterator.flatMap { case (g, s, m) =>
+        next.getOrElse((g, m), Nil).iterator.map(o => (g, s, o))
+      }
+      while (reached.hasNext && result.size <= gate) {
+        val pair = reached.next()
+        if (result.add(pair)) stepped += pair
+      }
       frontier = stepped
       i += 1
     }

@@ -17,7 +17,11 @@ import graft.ops.Skew
   * holds at most about `gate` rows after it. A partition that passed its
   * head bound is fetched again on its own, in full — what
   * `toLocalIterator` does for every partition — so an arbitrarily large
-  * result still streams with one partition resident at a time.
+  * result still streams with one partition resident at a time. That
+  * partition's final stage then runs twice: a streaming stage stops its
+  * first run after the head, but a blocking one (the sort of an ORDER BY
+  * or of a Turtle dump) completes both runs, and the first row waits for
+  * the head job over all partitions.
   *
   * Rows come from the executed plan's RDD (`queryExecution.toRdd`, the
   * plan the DataFrame already has; `df.rdd` would plan the query again)

@@ -62,7 +62,14 @@ final class SparqlServer(initial: GraftStore, port: Int = 0,
   private val ref = new AtomicReference[GraftStore](initial)
   def store: GraftStore = ref.get
 
-  private val server = SparqlServer.bind(new InetSocketAddress(host, port))
+  // The JDK server writes a response's headers and its body as separate
+  // small segments. With Nagle's algorithm on, the body waits for the
+  // client to ACK the headers, and a delayed ACK holds every response
+  // back by tens of milliseconds. The JDK reads this property once, when
+  // the first HttpServer of the JVM is created, so it must be set before
+  // the create below.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+  private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
   def boundPort: Int = server.getAddress.getPort
   def uri(path: String): String = s"http://$host:$boundPort$path"
 
@@ -561,15 +568,3 @@ final class SparqlServer(initial: GraftStore, port: Int = 0,
   def stop(): Unit = server.stop(0)
 }
 
-object SparqlServer {
-  // The JDK server writes a response's headers and its body as separate
-  // small segments. With Nagle's algorithm on, the body waits for the
-  // client to ACK the headers, and a delayed ACK holds every response
-  // back by tens of milliseconds. The JDK reads this property once, when
-  // the first HttpServer of the JVM is created, so it is set here, in
-  // the initializer that runs before [[bind]] creates one.
-  System.setProperty("sun.net.httpserver.nodelay", "true")
-
-  private def bind(addr: InetSocketAddress): HttpServer =
-    HttpServer.create(addr, 0)
-}

@@ -196,6 +196,37 @@ class PathFuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("a closure whose first round passes the gate falls back to the " +
+      "distributed fixpoint and equals naive") {
+    // a hub: 20 edges fit a gate of 50, but one round of p+ reaches all
+    // 10 × 10 (a_i, b_j) pairs, and the seeded q/p+ reaches them from 10
+    // seeds at once; the driver rounds must stop inside that round
+    val (p, q) = ("http://x/p", "http://x/q")
+    val hub = (0 until 10).flatMap(i => Seq((s"http://x/a$i", p, node(0)),
+      (node(0), p, s"http://x/b$i"), (node(1), q, s"http://x/a$i")))
+    val quads = quadsDf(hub)
+    def pairs(df: DataFrame, vs: String*) = df.collect().map(r =>
+      vs.map(v => r.getAs[Row](v).getString(1))).toSet
+    val plus = PathPattern(V("x"), POneOrMore(PLink(p)), V("y"))
+    val all = evalNaive(POneOrMore(PLink(p)), hub)
+    assert(all.size == 120)
+    val seeded = PathPattern(I(node(1)), PSeq(PLink(q), POneOrMore(PLink(p))),
+      V("y"))
+    val fromSeed = evalNaive(seeded.path, hub).collect {
+      case (s, o) if s == node(1) => Seq(o) }
+    assert(fromSeed.size == 11)
+    for (gate <- Seq(50L, graft.ops.Skew.BroadcastRowGate)) {
+      val (got, jobs) = TestJobs.count(spark.sparkContext)(
+        pairs(viaPathExec(gate)(plus, quads), "x", "y"))
+      assert(got == all.map { case (s, o) => Seq(s, o) }, s"gate $gate")
+      // the distributed loop's checkpoints and counts: more jobs than
+      // the driver-side solve's edge read plus the answer's collect
+      if (gate == 50L) assert(jobs > 3, s"$jobs jobs at gate 50")
+      assert(pairs(viaPathExec(gate)(seeded, quads), "y") == fromSeed,
+        s"seeded, gate $gate")
+    }
+  }
+
   test("a constant-seeded p+ within the closure gate runs at most 3 " +
       "jobs while translating") {
     // the distributed fixpoint runs a checkpoint and a count (and their

@@ -646,13 +646,17 @@ class SparqlServerSpec extends AnyFunSuite {
     // GET /update never reaches Spark: a 405 whose body is written after
     // the headers. With Nagle on, that second small write waits for the
     // client's delayed ACK, some 40 ms on Linux, on every response.
-    val ms = (0 until 11).map { _ =>
+    // The JDK reads the switch once, at the first HttpServer it creates.
+    assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
+    val ms = (0 until 31).map { _ =>
       val t0 = System.nanoTime()
       val r = get("/update")
       assert(r.statusCode() == 405 && r.body().nonEmpty)
       (System.nanoTime() - t0) / 1e6
     }.sorted
-    assert(ms(ms.size / 2) < 20,
+    // the median of 31 against the ~40 ms delayed-ACK floor: a GC pause
+    // or a busy core moves a few samples, not the middle one
+    assert(ms(ms.size / 2) < 30,
       ms.map(t => f"$t%.1f").mkString("", " ms, ", " ms"))
   }
 }
