@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with total + per-query
-  * seconds.
+  * seconds, plus an `errors` map (query name → exception class) of the
+  * queries that threw; those are left out of the seconds and the total.
   *
   * Methodology: queries run in sorted name order (stable across rounds)
   * after an untimed warmup that populates the session's quad-store cache
@@ -47,10 +48,18 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
+    // a query that throws is an error, never a timing: its name and
+    // exception class go to `errors`, and it leaves the per-query map
+    // and the total
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val perRun = (1 to runs).map { _ =>
       selected.map { case (name, fn) =>
         val t = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try fn(spark, sfDir).count()
+        catch {
+          case e: Throwable =>
+            errors.getOrElseUpdate(name, e.getClass.getName)
+        }
         val sec = (System.nanoTime() - t) / 1e9
         // the bench session IS the long-lived session ScratchCaches
         // exists for: release each query's scratch persists after its
@@ -70,16 +79,17 @@ object Bench {
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted; s((s.length - 1) / 2)
     }
-    val results = perRun.head.map(_._1).map { name =>
-      name -> median(perRun.map(_.toMap.apply(name)))
-    }
+    val results = perRun.head.map(_._1).filterNot(errors.contains)
+      .map { name => name -> median(perRun.map(_.toMap.apply(name))) }
     // compact 3-decimal formatting keeps the line under capture limits
     def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
+    val errs = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
+      .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val full =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"warmup_sec":${f(warmup)},"runs":$runs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"errors":$errs,"warmup_sec":${f(warmup)},"runs":$runs,"sf":"$sfDir"}"""
     // Output contract (r13, verdict #2): the full per-query JSON is the
     // FINAL stdout line. The driver parses a TAIL window of the output,
     // so a short stub printed after the full line beheads it (r12/r11:
@@ -88,7 +98,7 @@ object Bench {
     // FIRST (humans tailing still see the total), the full line LAST so
     // any tail window ends with the complete parseable JSON; the file
     // copy stays for belt and braces.
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","runs":$runs,"sf":"$sfDir","full":"target/bench_last.json"}""")
+    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","errors":$errs,"runs":$runs,"sf":"$sfDir","full":"target/bench_last.json"}""")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/bench_last.json"), full + "\n")
     catch { case _: Throwable => }

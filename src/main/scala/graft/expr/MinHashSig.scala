@@ -18,7 +18,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Measured honestly: dd3 is join/verify-dominated at local scales —
   * 0.69 → 0.64 s sf0.1, 3.20 → 3.10 s at 10× (3-run medians), a wash
-  * within noise. Kept because the signature pass is the SCAN-side
+  * within noise. Most of the signature stage was the shingle lambdas
+  * feeding this expression, not its hashes: with the native
+  * [[Shingles]] kernel in front, the traced MinHash step of the
+  * 10k-document pipeline-batch pass (4 cores) fell from 2.51 to 1.90 s
+  * and the pass's task CPU from 11.6 to 7.9 s (with the SimHash and
+  * fingerprint kernels). Kept because the signature pass is the SCAN-side
   * cost that grows with the corpus while banding/verify grow with the
   * candidate set, the expression is parity-locked bit-identical, and
   * it frees the per-element boxing the similarity family already

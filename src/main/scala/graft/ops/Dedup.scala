@@ -553,28 +553,20 @@ object Dedup {
       .select(col("da"), col("db"), col("inter"), col("na"), col("nb"))
   }
 
-  /** 64-bit SimHash per doc from token-frequency-weighted bit votes.
-    * Bit positions come from a broadcast 64-row table so the shift
-    * expressions stay plain resolvable columns.
+  /** 64-bit SimHash per doc from token-frequency-weighted bit votes:
+    * one per-row projection through the native [[graft.expr.SimHash]]
+    * loop — no explode, no aggregate, no exchange beyond the scan
+    * fan-out. Rows with NULL text are dropped.
+    *
+    * `doc_id` must be unique per input row: each row yields its own
+    * (doc_id, simhash), and rows sharing an id are not merged into one
+    * vote.
     */
-  def simhash(docs: DataFrame): DataFrame = {
-    // One shuffle: 64 per-bit vote sums as parallel aggregates over raw
-    // token occurrences (identical to frequency-weighted votes, since
-    // sum of +-1 per occurrence == +-cnt per distinct token). Replaces
-    // the former 64-row crossJoin + two-stage aggregation — no x64 row
-    // blowup, map-side partial aggregation does most of the work.
-    val toks = fanOut(docs).select(col("doc_id"),
-      explode(TextOps.tokens(col("text"))).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-    val votes = (0 until 64).map(j =>
-      sum(when(expr(s"shiftright(h, $j) % 2 != 0"), 1L).otherwise(-1L))
-        .as(s"b$j"))
-    toks.groupBy("doc_id").agg(votes.head, votes.tail: _*)
+  def simhash(docs: DataFrame): DataFrame =
+    fanOut(docs).where(col("text").isNotNull)
       .select(col("doc_id"),
-        (0 until 64).map(j =>
-          when(col(s"b$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash"))
-  }
+        graft.expr.SimHash.simhashCol(TextOps.tokens(col("text")))
+          .as("simhash"))
 
   /** Bit layout of the 64-bit simhash split into `m` near-equal blocks:
     * (shift, width) per block, widest blocks first.
@@ -621,12 +613,9 @@ object Dedup {
     * filters BEFORE the pair-dedup exchange.
     */
   def simhashPairs(docs: DataFrame, maxDist: Int = 7): DataFrame = {
-    // persist: the banding self-join consumes the signature table on
-    // BOTH sides and Catalyst does not reuse the aggregation exchange
-    // across the join aliases (verified: 0 ReusedExchange, the 64-vote
-    // aggregation ran twice) — the dd3 persist discipline applies
+    // no persist here: the signature is a per-row projection, and the
+    // only table both self-join sides read is `keyed` below
     val sh = simhash(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(ScratchCaches.track)
     // per-doc array of (table_id, key) built in one codegen'd
     // projection; explode replaces the former crossJoin
     val entries = simhashTables(maxDist).zipWithIndex.map {

@@ -13,29 +13,25 @@ import org.apache.spark.sql.types._
   */
 object TextOps {
 
-  val FingerprintMod = 1000000007L
+  val FingerprintMod: Long = graft.expr.TextFingerprint.Mod
 
   /** Whitespace tokens (corpus is single-space separated). */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** Distinct word k-shingles ("n-gram" units for Jaccard/MinHash).
-    * (r13 A/B note: replacing the per-gram slice with k element_at
-    * lookups measured SLOWER — 6.2 → 12.5 s of stage CPU on the dd2
-    * shingle pass — so the slice formulation stays.)
+  /** Distinct word k-shingles ("n-gram" units for Jaccard/MinHash), in
+    * first-occurrence order: the native [[graft.expr.Shingles]] window
+    * loop. Fewer than k tokens give `[]`, a NULL array gives NULL.
     */
   def shingles(ws: Column, k: Int = 3): Column =
-    when(size(ws) < k, array().cast(ArrayType(StringType)))
-      .otherwise(array_distinct(transform(
-        sequence(lit(1), size(ws) - (k - 1)),
-        i => concat_ws(" ", slice(ws, i, lit(k))))))
+    graft.expr.Shingles.shinglesCol(ws, k)
 
   /** Rolling polynomial fingerprint over characters:
-    * h = fold(chars)(h * 31 + code  mod  1e9+7). Deterministic and cheap;
-    * used for exact-dup detection without materializing full texts.
+    * h = fold(code points)(h * 31 + cp  mod  1e9+7), the native
+    * [[graft.expr.TextFingerprint]] loop. Deterministic and cheap; used
+    * for exact-dup detection without materializing full texts.
     */
   def fingerprint(text: Column): Column =
-    aggregate(split(text, ""), lit(0L),
-      (h, c) => pmod(h * 31 + ascii(c), lit(FingerprintMod)))
+    graft.expr.TextFingerprint.fingerprintCol(text)
 
   // tiny marker-word profiles; honest n-gram/stopword-voting heuristic
   val langMarkers: Map[String, Seq[String]] = Map(

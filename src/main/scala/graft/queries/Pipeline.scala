@@ -54,8 +54,9 @@ object Pipeline {
     * recomputes it) plus bound booleans — `hit_ok` (the approximate
     * list found at least `minHits` of the exact top-k for THIS query)
     * and `recall_ok` (total exact-top-k hits across all queries ≥
-    * `minTotal`). Bounds sit well under the measured sf0.01/sf0.1
-    * values (GateProbe) so only a real recall regression trips them.
+    * `minTotal`). Bounds sit well under the sf0.01/sf0.1 values
+    * recorded in COVERAGE.md, so only a real recall regression trips
+    * them.
     */
   private def annGate(s: SparkSession, dir: String, approx: DataFrame,
       k: Int, minHits: Option[Int], minTotal: Int): DataFrame = {

@@ -63,21 +63,8 @@ object QBench {
 
     def med(xs: Seq[Double]): Double = { val s = xs.sorted; s((s.length - 1) / 2) }
 
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
-      // one untimed warmup (JIT, codegen caches) — released like Bench
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => }
-      graft.ops.ScratchCaches.releaseAll()
-      val samples = (1 to runs).map { _ =>
-        jobs.set(0); stages.set(0); tasks.set(0)
-        shufRead.set(0); shufWrite.set(0); stageLog.clear()
-        val t = System.nanoTime()
-        val n = try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
-        val sec = (System.nanoTime() - t) / 1e9
-        graft.ops.ScratchCaches.releaseAll()
-        Thread.sleep(300) // let the listener bus drain before reading counters
-        (sec, n, jobs.get, stages.get, tasks.get, shufRead.get, shufWrite.get)
-      }
+    def report(name: String,
+        samples: Seq[(Double, Long, Int, Int, Int, Long, Long)]): Unit = {
       val m = med(samples.map(_._1))
       val last = samples.last
       println(f"QBENCH $name%-24s med=${m}%7.3f s  rows=${last._2}%7d  " +
@@ -93,6 +80,39 @@ object QBench {
         }
       }
     }
+
+    // a query that throws is reported as an error, never timed
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    def attempt(name: String)(body: => Long): Option[Long] =
+      try Some(body)
+      catch {
+        case e: Throwable =>
+          errors.getOrElseUpdate(name, e.getClass.getName); None
+      }
+
+    names.foreach { name =>
+      val fn = graft.SparkEntry.queries(name)
+      // one untimed warmup (JIT, codegen caches) — released like Bench
+      attempt(name)(fn(spark, sfDir).count())
+      graft.ops.ScratchCaches.releaseAll()
+      val samples = if (errors.contains(name)) Nil else (1 to runs).flatMap { _ =>
+        jobs.set(0); stages.set(0); tasks.set(0)
+        shufRead.set(0); shufWrite.set(0); stageLog.clear()
+        val t = System.nanoTime()
+        val n = attempt(name)(fn(spark, sfDir).count())
+        val sec = (System.nanoTime() - t) / 1e9
+        graft.ops.ScratchCaches.releaseAll()
+        Thread.sleep(300) // let the listener bus drain before reading counters
+        n.map((sec, _, jobs.get, stages.get, tasks.get, shufRead.get,
+          shufWrite.get))
+      }
+      errors.get(name) match {
+        case Some(cls) => println(f"QBENCH $name%-24s error=$cls")
+        case None => report(name, samples)
+      }
+    }
+    println("QBENCH errors " + errors.map { case (k, v) =>
+      "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}"))
     // QBENCH_HOLD=<sec>: keep the session (and UI, if enabled) alive so
     // the Spark REST API can be inspected after the runs
     sys.env.get("QBENCH_HOLD").foreach(s => Thread.sleep(s.toLong * 1000))

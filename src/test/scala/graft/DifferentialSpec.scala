@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.algebra.Algebra._
 import graft.model.Term
@@ -15,6 +16,32 @@ import graft.model.Term
   */
 class DifferentialSpec extends AnyFunSuite {
   import TestSpark._
+
+  // ---- replayable properties ------------------------------------------
+  // Every property draws its own seed and names it in its failure
+  // message. To replay a failure, paste that seed here: every property
+  // then runs from it.
+  private val ReplaySeed: Option[String] = None
+
+  /** Checks `prop` on `n` cases (GRAFT_FUZZ_N overrides) from one seed;
+    * a failure reports `failMsg`, the ScalaCheck status and the seed. An
+    * error ScalaCheck does not catch (an OutOfMemoryError, say) is
+    * rethrown with the seed too.
+    */
+  private def checkSeeded(prop: Prop, n: Int, failMsg: String): Unit = {
+    val seed = ReplaySeed.fold(Seed.random())(Seed.fromBase64(_).get)
+    val result =
+      try SCTest.check(
+        SCTest.Parameters.default
+          .withMinSuccessfulTests(
+            sys.env.getOrElse("GRAFT_FUZZ_N", n.toString).toInt)
+          .withInitialSeed(seed), prop)
+      catch {
+        case e: Throwable => fail(s"$failMsg: $e (seed ${seed.toBase64})", e)
+      }
+    assert(result.passed,
+      s"$failMsg: ${result.status} (seed ${seed.toBase64})")
+  }
 
   // ---- tiny term universe -------------------------------------------
   type T = (Int, String, String) // kind, lex, dt(for literals)
@@ -865,10 +892,7 @@ class DifferentialSpec extends AnyFunSuite {
         case _: UnsupportedOperationException => true
       }
     }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(
-        sys.env.getOrElse("GRAFT_FUZZ_N", "30").toInt), prop)
-    assert(result.passed, s"differential property failed: ${result.status}")
+    checkSeeded(prop, 30, "differential property failed")
   }
 
   test("LATERAL MINUS with a sometimes-unbound substituted var uses " +
@@ -1069,11 +1093,7 @@ class DifferentialSpec extends AnyFunSuite {
           case _: UnsupportedOperationException => true // loud corners
         }
     }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(
-        sys.env.getOrElse("GRAFT_FUZZ_N", "40").toInt), prop)
-    assert(result.passed,
-      s"lateral mark-exists differential failed: ${result.status}")
+    checkSeeded(prop, 40, "lateral mark-exists differential failed")
   }
 
   test("EXISTS inside a correlated LATERAL body pins outer vars per " +
@@ -1175,10 +1195,7 @@ class DifferentialSpec extends AnyFunSuite {
           case _: UnsupportedOperationException => true
         }
     }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(
-        sys.env.getOrElse("GRAFT_FUZZ_N", "30").toInt), prop)
-    assert(result.passed, s"differential property failed: ${result.status}")
+    checkSeeded(prop, 30, "differential property failed")
   }
 
   // ---- ORDER BY total-order differential (r10) ----------------------
@@ -1299,11 +1316,7 @@ class DifferentialSpec extends AnyFunSuite {
           case _: UnsupportedOperationException => true
         }
     }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(
-        sys.env.getOrElse("GRAFT_FUZZ_N", "40").toInt), prop)
-    assert(result.passed,
-      s"GRAPH-EXISTS differential failed: ${result.status}")
+    checkSeeded(prop, 40, "GRAPH-EXISTS differential failed")
     // directed witness that the shape truly executes (no USOE bail):
     // keep default-graph rows whose ?a appears as a subject in SOME
     // named graph
@@ -1359,10 +1372,7 @@ class DifferentialSpec extends AnyFunSuite {
         case _: UnsupportedOperationException => true // lateral corners
       }
     }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(
-        sys.env.getOrElse("GRAFT_FUZZ_N", "40").toInt), prop)
-    assert(result.passed, s"EXISTS differential failed: ${result.status}")
+    checkSeeded(prop, 40, "EXISTS differential failed")
   }
 
   test("EXISTS correlated only through inner expressions matches " +
@@ -1426,11 +1436,7 @@ class DifferentialSpec extends AnyFunSuite {
           case _: UnsupportedOperationException => true // loud corners
         }
     }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(
-        sys.env.getOrElse("GRAFT_FUZZ_N", "40").toInt), prop)
-    assert(result.passed,
-      s"EXISTS substitution differential failed: ${result.status}")
+    checkSeeded(prop, 40, "EXISTS substitution differential failed")
   }
 
   // ---- Group/aggregate differential (r10) ----------------------------
@@ -1704,10 +1710,7 @@ class DifferentialSpec extends AnyFunSuite {
             s"expected=$expected\ngot=$got")
         got == expected
     }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(
-        sys.env.getOrElse("GRAFT_FUZZ_N", "40").toInt), prop)
-    assert(result.passed, s"aggregate differential failed: ${result.status}")
+    checkSeeded(prop, 40, "aggregate differential failed")
 
     // aggregates under a correlated LATERAL (r11 residue): grouping is
     // per LEFT ROW — σ descends into the group input, keys-empty
@@ -1755,11 +1758,7 @@ class DifferentialSpec extends AnyFunSuite {
             s"expected=$expected\ngot=$got")
         got == expected
     }
-    val resultLat = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(
-        sys.env.getOrElse("GRAFT_FUZZ_N", "40").toInt), propLat)
-    assert(resultLat.passed,
-      s"lateral aggregate differential failed: ${resultLat.status}")
+    checkSeeded(propLat, 40, "lateral aggregate differential failed")
   }
 
   test("protocol dataset parameters equal textual FROM / FROM NAMED") {
@@ -1795,10 +1794,7 @@ class DifferentialSpec extends AnyFunSuite {
           proto == textual
         }
     }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(
-        sys.env.getOrElse("GRAFT_FUZZ_N", "40").toInt), prop)
-    assert(result.passed, s"protocol dataset differential: ${result.status}")
+    checkSeeded(prop, 40, "protocol dataset differential")
   }
 
   test("ORDER BY output respects every spec-fixed §15.1 order pair") {
@@ -1833,10 +1829,7 @@ class DifferentialSpec extends AnyFunSuite {
         }
         bad.isEmpty
     }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(
-        sys.env.getOrElse("GRAFT_FUZZ_N", "60").toInt), prop)
-    assert(result.passed, s"ORDER BY differential failed: ${result.status}")
+    checkSeeded(prop, 60, "ORDER BY differential failed")
   }
 
   // ---- tagged-literal constant differential (r11 s3) -----------------
@@ -1906,10 +1899,6 @@ class DifferentialSpec extends AnyFunSuite {
         s"parts got=$gotParts exp=$expParts")
       ok
     }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(
-        sys.env.getOrElse("GRAFT_FUZZ_N", "40").toInt), prop)
-    assert(result.passed,
-      s"tagged-literal differential failed: ${result.status}")
+    checkSeeded(prop, 40, "tagged-literal differential failed")
   }
 }

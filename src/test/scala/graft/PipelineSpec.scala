@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.io.Tables
 import graft.ops._
@@ -46,6 +48,160 @@ class PipelineSpec extends AnyFunSuite {
         .as("hof"))
     assert(c2.where(not(col("native") <=> col("hof"))).isEmpty,
       "corner-case minhash parity failed")
+  }
+
+  // ---- the formulations the native sketch kernels replaced ----------
+  // Test-only references: each kernel must equal its reference bit for
+  // bit, on the fixture corpus and on the corner rows below.
+
+  private def hofShingles(ws: Column, k: Int): Column =
+    when(size(ws) < k, array().cast(ArrayType(StringType)))
+      .otherwise(array_distinct(transform(
+        sequence(lit(1), size(ws) - (k - 1)),
+        i => concat_ws(" ", slice(ws, i, lit(k))))))
+
+  private def hofFingerprint(text: Column): Column =
+    aggregate(split(text, ""), lit(0L),
+      (h, c) => pmod(h * 31 + ascii(c), lit(TextOps.FingerprintMod)))
+
+  /** The explode + 64-aggregate SimHash over (doc_id, ws) rows. */
+  private def aggSimhash(rows: DataFrame): DataFrame = {
+    val votes = (0 until 64).map(j =>
+      sum(when(expr(s"shiftright(h, $j) % 2 != 0"), 1L).otherwise(-1L))
+        .as(s"b$j"))
+    rows.select(col("doc_id"), explode(col("ws")).as("tok"))
+      .withColumn("h", xxhash64(col("tok")))
+      .groupBy("doc_id").agg(votes.head, votes.tail: _*)
+      .select(col("doc_id"),
+        (0 until 64).map(j =>
+          when(col(s"b$j") > 0, lit(1L << j)).otherwise(lit(0L)))
+          .reduce(_ + _).as("simhash"))
+  }
+
+  private lazy val cornerTexts = {
+    import spark.implicits._
+    Seq[(Long, String)](
+      (9001L, null), (9002L, ""), (9003L, "solo"), (9004L, "two words"),
+      (9005L, "a b c a b c"), (9006L, "a  b   c  d "), (9007L, "  lead x y"),
+      (9008L, "x \uD835\uDCB3 y \uD83D\uDE00 z"), // non-BMP code points
+      (9009L, "cafe\u0301 e\u0301 x y"), // combining acute accent
+      (9010L, "\u00e9t\u00e9 na\u00efve \u4e2d\u6587 \u0000 end"))
+      .toDF("doc_id", "text")
+  }
+
+  private lazy val cornerArrays = {
+    import spark.implicits._
+    Seq[(Long, Seq[String])](
+      (1L, Seq("a", null, "b", "c", "d")), (2L, Seq(null, null, null)),
+      (3L, Seq("a", "b", null)), (4L, Seq.empty[String]), (5L, null),
+      (6L, Seq("x", "", "y", "", "x", "", "y")))
+      .toDF("doc_id", "ws")
+  }
+
+  private def allTexts: DataFrame =
+    docs.select(col("doc_id"), col("text")).unionByName(cornerTexts)
+
+  test("native shingles are bit-identical to the HOF formulation") {
+    val ws = allTexts.select(TextOps.tokens(col("text")).as("ws"))
+      .unionByName(cornerArrays.select(col("ws")))
+    for (k <- Seq(1, 2, 3, 5)) {
+      val both = ws.select(TextOps.shingles(col("ws"), k).as("native"),
+        hofShingles(col("ws"), k).as("hof"))
+      assert(both.schema("native").dataType == both.schema("hof").dataType)
+      val bad = both.where(not(col("native") <=> col("hof"))).take(3)
+      assert(bad.isEmpty, s"k=$k shingles diverged: ${bad.mkString("; ")}")
+    }
+    // null text gives null, fewer than k tokens give []
+    val corner = cornerTexts.select(col("doc_id"),
+      TextOps.shingles(TextOps.tokens(col("text")), 3).as("sh"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    assert(corner(9001L) == null)
+    assert(corner(9004L) == Seq.empty)
+    assert(corner(9005L) == Seq("a b c", "b c a", "c a b"))
+  }
+
+  test("native text fingerprint is bit-identical to the HOF fold") {
+    val both = allTexts.select(col("doc_id"),
+      TextOps.fingerprint(col("text")).as("native"),
+      hofFingerprint(col("text")).as("hof"))
+    val bad = both.where(not(col("native") <=> col("hof"))).take(3)
+    assert(bad.isEmpty, s"fingerprint diverged: ${bad.mkString("; ")}")
+    val fp = both.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    assert(fp(9001L) == null && fp(9002L) == 0L)
+    // winnowing's gram hashes call the fingerprint inside a lambda
+    val ws = TextOps.tokens(col("text"))
+    val grams = allTexts.select(TextOps.gramHashes(ws, 3).as("native"),
+      transform(TextOps.ngrams(ws, 3), g => hofFingerprint(g)).as("hof"))
+    assert(grams.where(not(col("native") <=> col("hof"))).isEmpty,
+      "gram hashes diverged from the HOF fingerprint")
+  }
+
+  test("native SimHash is bit-identical to the explode + aggregate form") {
+    def pairs(df: DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    val texts = allTexts
+    val ref = pairs(aggSimhash(
+      texts.select(col("doc_id"), TextOps.tokens(col("text")).as("ws"))))
+    val got = pairs(Dedup.simhash(texts))
+    assert(got.size == texts.where(col("text").isNotNull).count())
+    assert(got == ref,
+      s"simhash diverged: ${(got -- ref).take(3)} vs ${(ref -- got).take(3)}")
+    // null tokens hash to the seed, as xxhash64(NULL) does; an empty
+    // array votes nothing (the reference drops it) and a NULL array is NULL
+    val arr = pairs(cornerArrays.where(col("doc_id") =!= 5L)
+      .select(col("doc_id"), graft.expr.SimHash.simhashCol(col("ws"))))
+    assert(arr - (4L -> 0L) == pairs(aggSimhash(cornerArrays)))
+    assert(arr.contains(4L -> 0L))
+    assert(cornerArrays.where(col("doc_id") === 5L)
+      .select(graft.expr.SimHash.simhashCol(col("ws"))).head().isNullAt(0))
+  }
+
+  test("native sketch kernels compile to Java, with no interpreted fallback") {
+    val confs = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val ws = TextOps.tokens(col("text"))
+      val n = allTexts.select(TextOps.shingles(ws, 3).as("sh"),
+          graft.expr.SimHash.simhashCol(ws).as("simhash"),
+          TextOps.fingerprint(col("text")).as("fp"))
+        .where(col("sh").isNotNull || col("simhash").isNotNull ||
+          col("fp").isNotNull)
+        .count()
+      assert(n == allTexts.where(col("text").isNotNull).count())
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("Dedup.simhash plans no aggregate, no generate and no shuffle " +
+    "beyond the scan fan-out") {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    object H extends AdaptiveSparkPlanHelper
+    val sh = Dedup.simhash(docs)
+    sh.collect()
+    val plan: SparkPlan = sh.queryExecution.executedPlan
+    assert(H.collect(plan) { case a: BaseAggregateExec => a }.isEmpty, plan)
+    assert(H.collect(plan) { case g: GenerateExec => g }.isEmpty, plan)
+    val shuffles = H.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.forall(_.outputPartitioning
+      .isInstanceOf[RoundRobinPartitioning]), plan)
+    assert(shuffles.size <= 1, plan)
+  }
+
+  test("simhashPairs registers one scratch persist: the keyed table") {
+    ScratchCaches.releaseAll()
+    val before = ScratchCaches.activeCount
+    val pairs = Dedup.simhashPairs(docs, 7)
+    assert(ScratchCaches.activeCount - before == 1)
+    assert(pairs.count() > 0)
+    ScratchCaches.releaseAll()
   }
 
   test("df-cap drops stop-shingle-only candidates but keeps exact Jaccard") {
