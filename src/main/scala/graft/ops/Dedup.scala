@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.io.Fetch
 import graft.io.Tables.fanOut
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -266,6 +267,9 @@ object Dedup {
     * members and all unclustered documents. The drop-list side carries
     * only ids of near-dup members — a small fraction of the corpus — so
     * the anti join broadcasts at real scale; documents never reshuffle.
+    * When [[dupClusters]] solved within [[Skew.BroadcastRowGate]] pairs,
+    * the drop list holds at most that many ids by construction (one per
+    * spanning-forest edge); past the gate the broadcast is not gated.
     */
   def dedupApply(docs: DataFrame, clusters: DataFrame): DataFrame =
     // broadcast EXPLICITLY (r13): the drop list reaches here through the
@@ -361,8 +365,10 @@ object Dedup {
     * member list (near-dup ids only — a small fraction of the corpus)
     * against an (id, priority) projection of the docs; the canonical
     * pick is a window over that members-sized table, and the final
-    * drop-list anti join broadcasts ids exactly like [[dedupApply]].
-    * Documents never reshuffle.
+    * drop-list anti join broadcasts ids exactly like [[dedupApply]]
+    * (at most [[Skew.BroadcastRowGate]] ids when the clusters were
+    * solved within the gate, not gated past it). Documents never
+    * reshuffle.
     */
   def dedupApplyByPriority(docs: DataFrame, clusters: DataFrame,
       priority: Column): DataFrame = {
@@ -383,11 +389,16 @@ object Dedup {
     * that turns pairwise matches into keep/drop decisions (cluster_id =
     * the smallest doc_id in the component; keep it, drop the rest).
     *
-    * Alternating large-star / small-star (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14) instead of min-label
-    * propagation: each round rewires edges toward the minimum neighbor,
-    * halving tree height, so rounds are O(log n) in component DIAMETER —
-    * a templated-spam chain of length n clusters in ~log n shuffles, not
+    * Within [[Skew.BroadcastRowGate]] pairs (integral ids, no nulls) the
+    * pairs are read in one job and the components are solved on the
+    * driver by a union-find ([[localClusters]]): the distributed loop
+    * below pays two checkpoints, a count and a convergence probe per
+    * round, about 21 jobs for 500 pairs. Past the gate, alternating
+    * large-star / small-star (Kiveris et al., "Connected Components in
+    * MapReduce and Beyond", SoCC'14) instead of min-label propagation:
+    * each round rewires edges toward the minimum neighbor, halving tree
+    * height, so rounds are O(log n) in component DIAMETER — a
+    * templated-spam chain of length n clusters in ~log n shuffles, not
     * n. Every shuffle carries (u, v) id pairs only; localCheckpoint cuts
     * lineage per round (the same discipline as the PathExec fixpoints).
     *
@@ -400,14 +411,63 @@ object Dedup {
     dupClustersWithRounds(pairs)._1
 
   /** [[dupClusters]] plus the number of (large-star, small-star) double
-    * rounds it took — exposed so tests can assert the O(log n) bound.
+    * rounds it took (0 when solved on the driver) — exposed so tests can
+    * assert the O(log n) bound; `gate` = 0 forces the loop.
     */
-  private[graft] def dupClustersWithRounds(
-      pairs: DataFrame): (DataFrame, Int) = {
+  private[graft] def dupClustersWithRounds(pairs: DataFrame,
+      gate: Long = Skew.BroadcastRowGate): (DataFrame, Int) = {
     // persist BEFORE the symmetrization union — otherwise the (possibly
-    // expensive) pair-generation subtree materializes once per branch
+    // expensive) pair-generation subtree materializes once per branch;
+    // the driver read below fills the cache the loop then reuses. No
+    // result reads `p` (the driver frame holds its own rows, the loop's
+    // its checkpoints), so it is released here, on every path.
     val p = pairs.select(col("da"), col("db"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(ScratchCaches.track)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try localClusters(p, gate).map(_ -> 0).getOrElse(starClusters(p))
+    finally p.unpersist()
+  }
+
+  /** The components solved on the driver when `p` holds at most `gate`
+    * pairs of integral, non-null ids; None (the caller runs the loop)
+    * otherwise. One job reads the pairs; a union-find whose root is
+    * always the smaller id leaves each component's min at its root. The
+    * result is a one-partition RDD-backed frame of the loop's schema,
+    * like `PathExec`'s driver-side closures.
+    */
+  private def localClusters(p: DataFrame, gate: Long): Option[DataFrame] = {
+    val t = p.schema("da").dataType
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    if (!integral(t) || p.schema("db").dataType != t) return None
+    Fetch.atMost(p, gate)
+      .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      .map { rows =>
+        val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+        def id(x: Any): Long = x.asInstanceOf[Number].longValue
+        def find(x: Any): Any = {
+          var r = parent.getOrElseUpdate(x, x)
+          while (parent(r) != r) { // path halving
+            parent(r) = parent(parent(r)); r = parent(r)
+          }
+          r
+        }
+        rows.foreach { r =>
+          val (a, b) = (find(r.get(0)), find(r.get(1)))
+          if (id(a) < id(b)) parent(b) = a
+          else if (id(b) < id(a)) parent(a) = b
+        }
+        val spark = p.sparkSession
+        val nullable = p.schema.exists(_.nullable) // as the loop's union
+        spark.createDataFrame(spark.sparkContext.parallelize(
+          parent.keys.toVector.map(x => Row(x, find(x))), 1),
+          StructType(Seq(StructField("doc_id", t, nullable),
+            StructField("cluster_id", t, nullable))))
+      }
+  }
+
+  /** The large-star / small-star loop of [[dupClusters]] over the
+    * persisted pairs.
+    */
+  private def starClusters(p: DataFrame): (DataFrame, Int) = {
     val verts = p.select(col("da").as("id"))
       .unionByName(p.select(col("db").as("id"))).distinct()
       .localCheckpoint()
@@ -476,14 +536,19 @@ object Dedup {
         .localCheckpoint()
       // all edges point parent < child; the set is a star forest (= the
       // joint fixpoint, with each center the component min) exactly when
-      // no parent is itself a child — one id-pair join to test
-      converged = edges.as("a").join(edges.as("b"),
-        col("a.v") === col("b.u"), "left_semi").isEmpty
+      // no parent is itself a child AND no child has two parents. The
+      // second half is not implied by the first: a small star can leave
+      // a child under its own min and under a larger neighbor's min, two
+      // centers of one component that the next round merges.
+      val parentIsChild = edges.as("a").join(edges.as("b"),
+        col("a.v") === col("b.u"), "left_semi").select(col("u"))
+      val twoParents = edges.groupBy("u").count()
+        .where(col("count") > 1).select(col("u"))
+      converged = parentIsChild.unionByName(twoParents).isEmpty
     }
     val out = verts.join(edges, verts("id") === edges("u"), "left_outer")
       .select(verts("id").as("doc_id"),
         coalesce(col("v"), verts("id")).as("cluster_id"))
-    p.unpersist()
     (out, rounds)
   }
 

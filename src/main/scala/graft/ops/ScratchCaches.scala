@@ -22,9 +22,9 @@ import org.apache.spark.sql.DataFrame
   * }}}
   *
   * Releasing before the consuming action is safe but wasteful: the plan
-  * recomputes the subtree (correctness is never at stake). `unpersist`
-  * is idempotent, so ops that already release their own scratch (the
-  * connected-components fixpoint) may also be tracked here.
+  * recomputes the subtree (correctness is never at stake). An op whose
+  * result does not read its scratch releases it itself and does not
+  * register it ([[Dedup.dupClusters]]).
   */
 object ScratchCaches {
   private val tracked =
@@ -59,7 +59,7 @@ object ScratchCaches {
     *   ScratchCaches.retained {
     *     val pairs = Dedup.ngramJaccardPairs(docs, 8, 10)
     *     val clusters = Dedup.dupClusters(pairs)   // reuses warm scratch
-    *     Dedup.applyDrops(docs, clusters).write.parquet(out)
+    *     Dedup.dedupApply(docs, clusters).write.parquet(out)
     *   } // scratch released here
     * }}}
     */

@@ -17,9 +17,10 @@ object Skew {
     * [[saltedJoin]] (replicated small side) and by [[graft.GraftStore]]
     * (the store's insert/delete delta, which every read anti-joins as a
     * broadcast `LocalRelation`); the dedup drop lists in [[Dedup]] still
-    * broadcast without it. The same bound caps the rows the driver
-    * collects in one job: [[graft.io.Fetch]] (result rows) and
-    * [[graft.exec.PathExec]] (closures solved on the driver).
+    * broadcast without it past the gate. The same bound caps the rows the
+    * driver collects in one job: [[graft.io.Fetch]] (result rows),
+    * [[graft.exec.PathExec]] (closures solved on the driver) and
+    * [[Dedup.dupClusters]] (near-dup components solved on the driver).
     */
   val BroadcastRowGate: Long = 1L << 17
 

@@ -485,12 +485,102 @@ class PipelineSpec extends AnyFunSuite {
     val chain = (0 until n - 1).map(i =>
       (math.min(ids(i), ids(i + 1)), math.max(ids(i), ids(i + 1))))
       .toDF("da", "db")
-    val (comp, rounds) = Dedup.dupClustersWithRounds(chain)
+    // gate 0 forces the distributed loop: within the gate the driver
+    // answers in 0 rounds and the bound below would never be checked
+    val (comp, rounds) = Dedup.dupClustersWithRounds(chain, gate = 0)
     val got = comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == n && got.values.forall(_ == 0L),
       "every chain node must label to the min id 0")
     assert(rounds <= 12, s"chain of $n took $rounds double-rounds")
     assert(rounds <= Dedup.MaxCcRounds)
+    val (local, localRounds) = Dedup.dupClustersWithRounds(chain)
+    assert(localRounds == 0)
+    assert(local.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      got)
+  }
+
+  /** Sorted rows of [[Dedup.dupClustersWithRounds]] at `gate` with its
+    * round count, and sorted rows of the star loop (gate 0); the two
+    * frames' schemas must match.
+    */
+  private def bothClusterPaths(pairs: DataFrame,
+      gate: Long = Skew.BroadcastRowGate): (Seq[String], Int, Seq[String]) = {
+    val (gated, rounds) = Dedup.dupClustersWithRounds(pairs, gate)
+    val loop = Dedup.dupClustersWithRounds(pairs, 0)._1
+    assert(gated.schema == loop.schema)
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    (rows(gated), rounds, rows(loop))
+  }
+
+  test("dup clustering: the driver union-find matches the star loop " +
+      "row for row on seeded random edge lists") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(1)
+    val ids = rnd.shuffle((0L until 600L).toVector).take(60) // scrambled
+    val chain = (0 until 29).map(i => (ids(i), ids(i + 1)))
+    val star = (31 until 40).map(i => (ids(30), ids(i)))
+    val hub = (41 until 60).map(i => (ids(i), ids(40))) ++
+      (41 until 59).map(i => (ids(i), ids(i + 1)))
+    val tri = Seq((ids(0), ids(5)), (ids(5), ids(9)), (ids(9), ids(0)))
+    val random = Seq.fill(3)(Seq.fill(rnd.nextInt(80) + 1)(
+      (ids(rnd.nextInt(60)), ids(rnd.nextInt(60)))))
+    val cases = Seq("chain" -> chain, "star" -> star, "hub" -> hub,
+      "triangles" -> (tri ++ tri.map(_.swap)),
+      "reversed" -> chain.map { case (a, b) => (a max b, a min b) },
+      "duplicates" -> (star ++ star ++ chain.take(5)),
+      "self pairs" -> (Seq((ids(1), ids(1)), (ids(7), ids(7))) ++ tri),
+      "all" -> (chain ++ star ++ hub ++ tri ++ random.head)) ++
+      random.map("random" -> _)
+    for ((name, edges) <- cases) {
+      val (local, rounds, loop) = bothClusterPaths(edges.toDF("da", "db"))
+      assert(local == loop, name)
+      assert(rounds == 0, name)
+    }
+    // Int ids keep their type; an empty pair list gives no rows
+    val ints = Seq((3, 1), (1, 2), (7, 8)).toDF("da", "db")
+    val (li, _, lo) = bothClusterPaths(ints)
+    assert(li == lo && li.size == 5)
+    assert(Dedup.dupClusters(ints).schema("cluster_id").dataType ==
+      IntegerType)
+    val (le, _, lpe) =
+      bothClusterPaths(Seq.empty[(Long, Long)].toDF("da", "db"))
+    assert(le.isEmpty && lpe.isEmpty)
+  }
+
+  test("dup clustering falls back to the star loop just past the gate, " +
+      "and on a null id") {
+    import spark.implicits._
+    val gate = 20L
+    val chain = (0L to gate).map(i => (i * 7 % 23, (i + 1) * 7 % 23))
+    val (at, atRounds, loopAt) =
+      bothClusterPaths(chain.take(gate.toInt).toDF("da", "db"), gate)
+    assert(at == loopAt && atRounds == 0)
+    val (past, pastRounds, loopPast) =
+      bothClusterPaths(chain.toDF("da", "db"), gate)
+    assert(past == loopPast && pastRounds > 0)
+    // a null id: the loop's answer, never a silent 0
+    val withNull = Seq((Some(1L), Some(2L)), (None, Some(5L)),
+      (Some(5L), Some(6L)), (Some(0L), None)).toDF("da", "db")
+    val (n, nRounds, loopN) = bothClusterPaths(withNull)
+    assert(n == loopN && nRounds > 0)
+  }
+
+  test("dup clustering within the gate: at most 3 jobs with the " +
+      "result's count, and no scratch cache left registered") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(500)
+    val pairs = Seq.fill(500)((rnd.nextInt(1000).toLong,
+      rnd.nextInt(1000).toLong)).toDF("da", "db")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      assert(pairs.count() == 500)
+      val before = ScratchCaches.activeCount
+      val (n, jobs) = org.apache.spark.TestJobs.count(spark.sparkContext)(
+        Dedup.dupClusters(pairs).count())
+      assert(jobs <= 3, s"$jobs jobs")
+      assert(n == Dedup.dupClustersWithRounds(pairs, 0)._1.count())
+      assert(ScratchCaches.activeCount == before)
+    } finally pairs.unpersist()
   }
 
   test("dup clustering handles many mixed components with scrambled ids") {

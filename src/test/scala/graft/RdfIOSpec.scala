@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.io.{RdfIO, TpchRdf}
 import graft.model.Term
@@ -22,6 +22,46 @@ class RdfIOSpec extends AnyFunSuite {
       """<http://e/s> <http://e/p> "x" <http://e/g> .""",
       allowGraph = true).get
     assert(nq.g.lex == "http://e/g")
+  }
+
+  test("N-Triples/N-Quads parse compiles to Java, with no interpreted " +
+      "fallback, and keeps every quad") {
+    val lines = Seq(
+      """<http://e/s> <http://e/p> "a\"b\ncé"^^<http://www.w3.org/2001/XMLSchema#string> .""",
+      """_:b1 <http://e/p> "hola"@es-419 <http://e/g> .""",
+      "# comment",
+      "",
+      """<http://e/s> <http://e/q> _:b1 _:g .""",
+      """<http://e/s> <http://e/n> "42"^^<http://www.w3.org/2001/XMLSchema#integer> .""",
+      """<http://e/r> <http://e/t> << <http://e/s> <http://e/p> "v" >> .""")
+    val dir = java.nio.file.Files.createTempDirectory("graft_nqgen")
+    val nq = dir.resolve("d.nq")
+    val nt = dir.resolve("d.nt")
+    java.nio.file.Files.writeString(nq, lines.mkString("", "\n", "\n"))
+    java.nio.file.Files.writeString(nt,
+      lines.filterNot(_.contains("<http://e/g>"))
+        .map(_.replace(" _:g .", " .")).mkString("", "\n", "\n"))
+    def rowsOf(q: RdfIO.QuadRow): Seq[Row] = Seq(q.g, q.s, q.p, q.o)
+      .map(t => Row(t.kind, t.lex, t.dt, t.lang))
+    def expected(path: java.nio.file.Path, allowGraph: Boolean) =
+      java.nio.file.Files.readAllLines(path).toArray.toSeq
+        .flatMap(l => RdfIO.parseLine(l.toString, allowGraph))
+        .map(rowsOf).sortBy(_.toString)
+    def parsed(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+      .sortBy(_.toString)
+    val confs = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val (quads, triples) = try (
+      parsed(RdfIO.readNQuads(spark, nq.toString)),
+      parsed(RdfIO.readNTriples(spark, nt.toString))
+    ) finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(quads == expected(nq, allowGraph = true) && quads.size == 5)
+    assert(triples == expected(nt, allowGraph = false) && triples.size == 4)
   }
 
   test("RDF 1.2 output edition: quoted terms serialize as <<( )>> " +
@@ -1809,7 +1849,7 @@ class RdfIOSpec extends AnyFunSuite {
 
   test("RDF serializer roundtrip fuzz: hostile literals survive every " +
       "format (nt, nq, ttl, trig, rdfxml, jsonld)") {
-    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.{DataFrame, Row}
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     import graft.model.Term
     // framing quotes/backslashes, newlines/tabs/CRs (XML CR
