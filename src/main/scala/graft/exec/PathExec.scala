@@ -369,11 +369,8 @@ object PathExec {
     * growing result all stay within `gate` rows; None (the caller runs
     * the distributed loop) as soon as one passes it. The edges are read
     * as they come, duplicates and all (one job; the gate counts them,
-    * the sets drop them). The result is a one-partition RDD-backed
-    * frame with the edges' schema, not a `LocalRelation`: like the
-    * checkpointed result of the distributed loop it carries no size
-    * estimate, so the plans it feeds are optimized and joined as they
-    * were before.
+    * the sets drop them). The result is a [[Fetch.frame]] with the
+    * edges' schema.
     */
   private def localClosure(edges: DataFrame, seed: Option[DataFrame],
       gate: Long): Option[DataFrame] =
@@ -386,12 +383,9 @@ object PathExec {
           r.getAs[Row]("po"))).toSet,
         seed.map(_ => seedRows.iterator.map(_.getStruct(0)).toSet),
         maxIters(edges), gate)
-    } yield {
-      val spark = edges.sparkSession
-      spark.createDataFrame(spark.sparkContext.parallelize(
-        result.iterator.map { case (g, s, o) => Row(g, s, o) }.toSeq, 1),
-        edges.schema)
-    }
+    } yield Fetch.frame(edges.sparkSession,
+      result.iterator.map { case (g, s, o) => Row(g, s, o) }.toSeq,
+      edges.schema)
 
   /** (pg, ps, po) on the driver. */
   private type Pair = (Row, Row, Row)

@@ -1,9 +1,10 @@
 package graft.io
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.Skew
 
@@ -58,6 +59,17 @@ object Fetch {
     val got = collect(rdd, 0 until rdd.getNumPartitions, Int.MaxValue).flatten
     if (got.length > n) None else Some(got.map(decoder(lim)))
   }
+
+  /** `rows` as a one-partition RDD-backed frame of `schema`: how a result
+    * solved on the driver re-enters a plan. Not a `LocalRelation`: its
+    * exact small size estimate re-plans every join downstream, and with
+    * it `DifferentialSpec` ran its 4 GB test heap out of memory. An
+    * RDD-backed frame carries no estimate, like the checkpointed or
+    * shuffled result the driver path stands in for.
+    */
+  private[graft] def frame(spark: SparkSession, rows: Seq[Row],
+      schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
   /** One job: the first `limit` rows of each of `parts`, copied out of
     * the executors' reused row buffers.

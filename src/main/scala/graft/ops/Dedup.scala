@@ -427,17 +427,22 @@ object Dedup {
     finally p.unpersist()
   }
 
+  /** The id types the driver-side solvers accept ([[localClusters]],
+    * [[simhashPairs]], [[Similarity.semdedupPairs]]): each compares ids
+    * as longs and writes them back with their own type.
+    */
+  private[ops] val IntegralIds =
+    Set[DataType](ByteType, ShortType, IntegerType, LongType)
+
   /** The components solved on the driver when `p` holds at most `gate`
     * pairs of integral, non-null ids; None (the caller runs the loop)
     * otherwise. One job reads the pairs; a union-find whose root is
     * always the smaller id leaves each component's min at its root. The
-    * result is a one-partition RDD-backed frame of the loop's schema,
-    * like `PathExec`'s driver-side closures.
+    * result is a [[Fetch.frame]] of the loop's schema.
     */
   private def localClusters(p: DataFrame, gate: Long): Option[DataFrame] = {
     val t = p.schema("da").dataType
-    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
-    if (!integral(t) || p.schema("db").dataType != t) return None
+    if (!IntegralIds(t) || p.schema("db").dataType != t) return None
     Fetch.atMost(p, gate)
       .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
       .map { rows =>
@@ -455,10 +460,9 @@ object Dedup {
           if (id(a) < id(b)) parent(b) = a
           else if (id(b) < id(a)) parent(a) = b
         }
-        val spark = p.sparkSession
         val nullable = p.schema.exists(_.nullable) // as the loop's union
-        spark.createDataFrame(spark.sparkContext.parallelize(
-          parent.keys.toVector.map(x => Row(x, find(x))), 1),
+        Fetch.frame(p.sparkSession,
+          parent.keys.toVector.map(x => Row(x, find(x))),
           StructType(Seq(StructField("doc_id", t, nullable),
             StructField("cluster_id", t, nullable))))
       }
@@ -674,13 +678,106 @@ object Dedup {
     * (see [[simhashTables]]) — exact (recall 1.0 over the simhash
     * space) by pigeonhole, with key spaces of 2^14..2^16 values per
     * table so bucket population stays bounded as the corpus grows.
-    * Verification computes the true hamming distance per candidate and
-    * filters BEFORE the pair-dedup exchange.
+    *
+    * The signatures (`doc_id`, `simhash`: 16 bytes per doc) are
+    * persisted and read in one job. Within [[Skew.BroadcastRowGate]]
+    * signatures with integral ids, and as long as the pairs found stay
+    * within it, the same tables bucket them on the driver and the pairs
+    * come back as a [[Fetch.frame]] of the distributed path's schema;
+    * nothing stays cached. Past the gate the banding self-join runs as a
+    * distributed plan over the cached signatures, which stay registered
+    * with [[ScratchCaches]] next to the keyed table; such input pays one
+    * probe job, which also fills that cache. Verification computes the
+    * true hamming distance per candidate and filters BEFORE the
+    * pair-dedup exchange.
     */
-  def simhashPairs(docs: DataFrame, maxDist: Int = 7): DataFrame = {
-    // no persist here: the signature is a per-row projection, and the
-    // only table both self-join sides read is `keyed` below
-    val sh = simhash(docs)
+  def simhashPairs(docs: DataFrame, maxDist: Int = 7): DataFrame =
+    simhashPairsGated(docs, maxDist)
+
+  /** [[simhashPairs]] with its gate: `gate` = 0 forces the distributed
+    * banding join.
+    */
+  private[graft] def simhashPairsGated(docs: DataFrame, maxDist: Int = 7,
+      gate: Long = Skew.BroadcastRowGate): DataFrame =
+    signaturePairs(simhash(docs), maxDist, gate)
+
+  /** The pairs of [[simhashPairs]] over (`doc_id`, `simhash`) rows. */
+  private[graft] def signaturePairs(sigs: DataFrame, maxDist: Int,
+      gate: Long): DataFrame = {
+    val sh = sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    localSimhashPairs(sh, maxDist, gate) match {
+      case Some(pairs) => sh.unpersist(); pairs
+      case None =>
+        // registered after `keyed`, whose cached plan reads it, so a
+        // release drops `keyed` first and never re-caches it
+        val pairs = bandedPairs(sh, maxDist)
+        ScratchCaches.track(sh)
+        pairs
+    }
+  }
+
+  /** The pairs of [[simhashPairs]] found on the driver, when `sh` holds
+    * at most `gate` rows with integral ids and at most `gate` pairs come
+    * out; None (the caller runs the banding join) otherwise. Rows with a
+    * null id or signature are skipped: the join's `<` and key equality
+    * never pair them. Per table, each row's key (packed as the join
+    * packs it, at most 22 bits) goes above its row number in one long,
+    * so after a primitive sort each bucket is a run.
+    */
+  private def localSimhashPairs(sh: DataFrame, maxDist: Int,
+      gate: Long): Option[DataFrame] = {
+    val t = sh.schema("doc_id").dataType
+    if (!IntegralIds(t)) return None
+    Fetch.atMost(sh, gate).flatMap { rows =>
+      val sigs = rows.filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+      val n = sigs.length
+      val ids = sigs.map(_.getAs[Number](0).longValue)
+      val hs = sigs.map(_.getLong(1))
+      val seen = scala.collection.mutable.HashSet.empty[(Long, Long)]
+      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+      def pair(x: Int, y: Int): Unit = if (ids(x) < ids(y)) {
+        val dist = java.lang.Long.bitCount(hs(x) ^ hs(y))
+        if (dist <= maxDist && seen.add((ids(x), ids(y))))
+          out += Row(sigs(x).get(0), sigs(y).get(0), dist)
+      }
+      val runs = new Array[Long](n)
+      val tables = simhashTables(maxDist).iterator
+      while (tables.hasNext && out.size <= gate) {
+        val blocks = tables.next()
+        for (i <- 0 until n)
+          runs(i) = blocks.foldLeft(0L) { case (k, (s, w)) =>
+            (k << w) | ((hs(i) >>> s) & ((1L << w) - 1))
+          } << 32 | i
+        java.util.Arrays.sort(runs)
+        var lo = 0
+        while (lo < n && out.size <= gate) {
+          var hi = lo + 1
+          while (hi < n && runs(hi) >>> 32 == runs(lo) >>> 32) hi += 1
+          var a = lo
+          while (a < hi && out.size <= gate) {
+            for (b <- a + 1 until hi) {
+              pair(runs(a).toInt, runs(b).toInt)
+              pair(runs(b).toInt, runs(a).toInt)
+            }
+            a += 1
+          }
+          lo = hi
+        }
+      }
+      if (out.size > gate) None
+      else {
+        val id = sh.schema("doc_id")
+        Some(Fetch.frame(sh.sparkSession, out.toSeq, StructType(Seq(
+          id.copy(name = "da"), id.copy(name = "db"),
+          StructField("dist", IntegerType, sh.schema("simhash").nullable)))))
+      }
+    }
+  }
+
+  /** The distributed banding self-join of [[simhashPairs]] over the
+    * signatures `sh`.
+    */
+  private def bandedPairs(sh: DataFrame, maxDist: Int): DataFrame = {
     // per-doc array of (table_id, key) built in one codegen'd
     // projection; explode replaces the former crossJoin
     val entries = simhashTables(maxDist).zipWithIndex.map {

@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
+import graft.io.Fetch
 
 /** Similarity search over embedding columns (Array[Float]).
   *
@@ -237,11 +238,9 @@ object Similarity {
   /** DataFrame view of the centroid table (list_id, cent, cnorm2). */
   def ivfCentroids(emb: DataFrame, nlist: Int, refineIters: Int = 3,
       sampleRate: Double = 0.25): DataFrame = {
-    val spark = emb.sparkSession
     val rows = ivfCentroidsLocal(emb, nlist, refineIters, sampleRate)
-      .map(c => org.apache.spark.sql.Row(c.id, c.vec, c.norm2))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
+      .map(c => Row(c.id, c.vec, c.norm2))
+    Fetch.frame(emb.sparkSession, rows,
       StructType(Seq(
         StructField("list_id", LongType, nullable = false),
         StructField("cent", ArrayType(FloatType), nullable = false),
@@ -302,16 +301,33 @@ object Similarity {
     * construction (cross-cluster near-dups are unseen — the paper's own
     * trade); every reported pair's cosine is exact.
     *
-    * The 100 TB shape is the IVF one: centroids train on a bounded
-    * deterministic sample, assignment is a pure map-side fold (no
-    * corpus shuffle), and the within-cluster self-join shuffles on the
-    * short `list_id` key — quadratic only within a cluster, and nlist
-    * is the knob that bounds cluster population (set nlist ~ corpus/10k
-    * at real scale; 25k clusters over 8M docs in the paper).
+    * Within [[Skew.BroadcastRowGate]] vectors (by the count the list
+    * sizing takes anyway) the vectors are read in one job and assigned
+    * and compared on the driver ([[localSemdedup]]), with the
+    * distributed path's arithmetic, so the same pairs and bit-equal
+    * cosines come back as a [[graft.io.Fetch.frame]] of its schema.
+    * Past the gate, or on input the driver path does not accept, the
+    * distributed path runs as it did, with no job added. Its shape is
+    * the IVF one: centroids train on a bounded deterministic sample,
+    * assignment is a pure map-side fold (no corpus shuffle), and the
+    * within-cluster self-join shuffles on the short `list_id` key —
+    * quadratic only within a cluster, and nlist is the knob that bounds
+    * cluster population (set nlist ~ corpus/10k at real scale; 25k
+    * clusters over 8M docs in the paper).
     */
   def semdedupPairs(emb: DataFrame, tau: Double, nlist: Int = 16,
       refineIters: Int = 3, assign: Int = 2,
-      targetClusterSize: Long = 256): DataFrame = {
+      targetClusterSize: Long = 256): DataFrame =
+    semdedupPairsGated(emb, tau, nlist, refineIters, assign,
+      targetClusterSize)
+
+  /** [[semdedupPairs]] with its gate: `gate` = 0 forces the distributed
+    * list self-join.
+    */
+  private[graft] def semdedupPairsGated(emb: DataFrame, tau: Double,
+      nlist: Int = 16, refineIters: Int = 3, assign: Int = 2,
+      targetClusterSize: Long = 256,
+      gate: Long = Skew.BroadcastRowGate): DataFrame = {
     // Within-cluster pair work is ~(n/nlist)² per cluster — quadratic in
     // CLUSTER SIZE, so a fixed nlist turns linear corpus growth into
     // quadratic cost (measured: 2.8 s → 58 s at 10× input with nlist
@@ -319,8 +335,8 @@ object Similarity {
     // the corpus (25k clusters / 8M docs), cluster SIZE stays bounded —
     // so nlist grows to hold targetClusterSize and total pair work is
     // n · targetClusterSize · assign², linear in n (default 256 ≈ the
-    // paper's ~320 docs/cluster). The count() here is
-    // a cheap metadata-scale action against the (columnar) source.
+    // paper's ~320 docs/cluster). The count() here sizes the lists and
+    // also picks the path: driver within the gate, distributed past it.
     // Ceiling 4096: centroids compile into the assignment expression
     // in 256-centroid CHUNKS (see topLists), so the per-subtree codegen
     // stays bounded; past this, switch to a broadcast centroid table
@@ -330,6 +346,9 @@ object Similarity {
     val effNlist = math.min(4096L,
       math.max(nlist.toLong, n / targetClusterSize)).toInt
     val cents = ivfCentroidsLocal(emb, effNlist, refineIters)
+    val local =
+      if (n <= gate) localSemdedup(emb, cents, tau, assign, gate) else None
+    if (local.isDefined) return local.get
     // persist BEFORE the explode: Generate re-evaluates a non-trivial
     // generator once per OUTPUT row (the dd15 lesson), so the nlist-way
     // scoring fold must land in the cache as an `assign`-element array
@@ -357,6 +376,131 @@ object Similarity {
       .where(col("cos") >= tau)
       .select(col("va"), col("vb"), col("cos"))
       .dropDuplicates("va", "vb")
+  }
+
+  /** The pairs of [[semdedupPairs]] computed on the driver, or None (the
+    * caller runs the distributed path, with its own answer or error).
+    * One job reads (`vec_id`, `embedding`), at most `gate` rows. Each
+    * vector goes to its top `assign` lists as [[topLists]] ranks them:
+    * [[graft.expr.DotSeq]]'s sequential float→double fold,
+    * `dot / (sqrt(n2) * sqrt(cn2))`, score descending, ties to the
+    * lowest list id, with scores compared as Spark orders finite
+    * doubles (`-0.0 == 0.0`). Pairs are compared only within a
+    * list, in the first list they share: `va < vb`, `cos >= tau`, one
+    * row per pair.
+    *
+    * The driver path does not take a null id or embedding, a null or
+    * non-finite element, mixed dimensions, a zero vector or centroid
+    * (where the distributed path divides by zero), ids that are not
+    * integral, or an answer of more than `gate` pairs.
+    */
+  private def localSemdedup(emb: DataFrame, cents: Seq[Centroid],
+      tau: Double, assign: Int, gate: Long): Option[DataFrame] = {
+    val idField = emb.schema("vec_id")
+    val floats = emb.schema("embedding").dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+    if (!Dedup.IntegralIds(idField.dataType) || !floats ||
+        assign < 0 || assign > 256) return None
+    val rows = Fetch.atMost(emb.select(col("vec_id"), col("embedding")),
+      gate).getOrElse(return None)
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) ||
+        r.getSeq[Any](1).exists(x => x == null ||
+          !java.lang.Float.isFinite(x.asInstanceOf[Float])))) return None
+    val n = rows.length
+    val ids = rows.map(_.getAs[Number](0).longValue)
+    val vecs = rows.map(_.getSeq[Float](1).toArray)
+    val cv = cents.map(_.vec.toArray).toArray
+    val cn2 = cents.map(_.norm2).toArray
+    val dims = (vecs.iterator ++ cv.iterator).map(_.length).toSet
+    if (dims.size > 1 || cn2.contains(0.0)) return None
+    val n2 = vecs.map(v => dot(v, v))
+    if (n2.contains(0.0)) return None
+    // each vector's top `assign` (score, list id), best first: a list
+    // enters above every entry it beats and pushes the last one out.
+    // Finite elements and nonzero norms keep every score finite.
+    val k = math.min(assign, cv.length)
+    val lists = Array.tabulate(n) { x =>
+      val topS = Array.fill(k)(Double.NegativeInfinity)
+      val topId = new Array[Long](k)
+      for (j <- cv.indices) {
+        val (s, id) =
+          (dot(vecs(x), cv(j)) / (math.sqrt(n2(x)) * math.sqrt(cn2(j))),
+            cents(j).id)
+        var at = k
+        while (at > 0 &&
+            (s > topS(at - 1) || s == topS(at - 1) && id < topId(at - 1)))
+          at -= 1
+        if (at < k) {
+          System.arraycopy(topS, at, topS, at + 1, k - 1 - at)
+          System.arraycopy(topId, at, topId, at + 1, k - 1 - at)
+          topS(at) = s; topId(at) = id
+        }
+      }
+      topId
+    }
+    // each list's member rows, lists in id order
+    val members = (0 until n).flatMap(x => lists(x).map(_ -> x))
+      .groupMap(_._1)(_._2).toSeq.sortBy(_._1)
+      .map { case (l, m) => (l, m.toArray) }
+    // a pair sharing several lists is compared in the lowest one only
+    def sharesEarlier(x: Int, y: Int, list: Long): Boolean = {
+      val (lx, ly) = (lists(x), lists(y))
+      var shared = false
+      var i = 0
+      while (!shared && i < lx.length) {
+        if (lx(i) < list) {
+          var j = 0
+          while (!shared && j < ly.length) { shared = ly(j) == lx(i); j += 1 }
+        }
+        i += 1
+      }
+      shared
+    }
+    // lists are compared in parallel, each keeping its (x, y, cos) in
+    // member order; they merge in list order, one row per pair
+    type Found = scala.collection.mutable.ArrayBuffer[(Int, Int, Double)]
+    val emitted = new java.util.concurrent.atomic.AtomicLong
+    val found = java.util.stream.IntStream.range(0, members.length)
+      .parallel().mapToObj[Found] { li =>
+        val (list, m) = members(li)
+        val got: Found = scala.collection.mutable.ArrayBuffer.empty
+        var a = 0
+        while (a < m.length && emitted.get <= gate) {
+          var b = a + 1
+          while (b < m.length) {
+            val (x, y) =
+              if (ids(m(a)) < ids(m(b))) (m(a), m(b)) else (m(b), m(a))
+            if (ids(x) < ids(y) && !sharesEarlier(x, y, list)) {
+              val cos =
+                dot(vecs(x), vecs(y)) / (math.sqrt(n2(x)) * math.sqrt(n2(y)))
+              if (cos >= tau) { got += ((x, y, cos)); emitted.incrementAndGet() }
+            }
+            b += 1
+          }
+          a += 1
+        }
+        got
+      }.toArray(new Array[Found](_))
+    val seen = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    val out = for {
+      got <- found.iterator; (x, y, cos) <- got
+      if seen.add((ids(x), ids(y)))
+    } yield Row(rows(x).get(0), rows(y).get(0), cos)
+    val pairs = out.take(gate.toInt + 1).toVector
+    if (pairs.size > gate) None
+    else Some(Fetch.frame(emb.sparkSession, pairs, StructType(Seq(
+      idField.copy(name = "va"), idField.copy(name = "vb"),
+      StructField("cos", DoubleType, nullable = true)))))
+  }
+
+  /** [[graft.expr.DotSeq]]'s fold over equal-length float arrays. */
+  private def dot(a: Array[Float], b: Array[Float]): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+    acc
   }
 
   /** Product-quantization codebooks: `m` subspaces of `subDim` dims,

@@ -19,8 +19,11 @@ object Skew {
     * broadcast `LocalRelation`); the dedup drop lists in [[Dedup]] still
     * broadcast without it past the gate. The same bound caps the rows the
     * driver collects in one job: [[graft.io.Fetch]] (result rows),
-    * [[graft.exec.PathExec]] (closures solved on the driver) and
-    * [[Dedup.dupClusters]] (near-dup components solved on the driver).
+    * [[graft.exec.PathExec]] (closures solved on the driver),
+    * [[Dedup.dupClusters]] (near-dup components solved on the driver),
+    * [[Dedup.simhashPairs]] (signatures bucketed on the driver) and
+    * [[Similarity.semdedupPairs]] (vectors assigned and compared on the
+    * driver).
     */
   val BroadcastRowGate: Long = 1L << 17
 

@@ -195,13 +195,17 @@ class PipelineSpec extends AnyFunSuite {
     assert(shuffles.size <= 1, plan)
   }
 
-  test("simhashPairs registers one scratch persist: the keyed table") {
+  test("simhashPairs registers its two scratch persists past the gate " +
+      "(the signatures and the keyed table) and none within it") {
     ScratchCaches.releaseAll()
     val before = ScratchCaches.activeCount
-    val pairs = Dedup.simhashPairs(docs, 7)
-    assert(ScratchCaches.activeCount - before == 1)
+    val pairs = Dedup.simhashPairsGated(docs, 7, gate = 0)
+    assert(ScratchCaches.activeCount - before == 2)
     assert(pairs.count() > 0)
     ScratchCaches.releaseAll()
+    val local = Dedup.simhashPairs(docs, 7)
+    assert(ScratchCaches.activeCount == 0)
+    assert(local.count() == pairs.count())
   }
 
   test("df-cap drops stop-shingle-only candidates but keeps exact Jaccard") {
@@ -265,11 +269,14 @@ class PipelineSpec extends AnyFunSuite {
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("dist"))
       .where(col("dist") <= 7)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val banded = Dedup.simhashPairs(slice, 7)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    for (gate <- Seq(Skew.BroadcastRowGate, 0L)) {
+      val banded = Dedup.simhashPairsGated(slice, 7, gate)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(banded == brute, s"gate $gate: banding missed " +
+        s"${brute -- banded} / invented ${banded -- brute}")
+    }
     sh.unpersist()
-    assert(banded == brute,
-      s"banding missed ${brute -- banded} / invented ${banded -- brute}")
+    ScratchCaches.releaseAll()
   }
 
   test("simhash near-dups recall >= 0.8 of jaccard near-dups") {
@@ -280,6 +287,223 @@ class PipelineSpec extends AnyFunSuite {
     assert(sim.nonEmpty, "simhash should find near-dup pairs")
     val recall = (jacc & sim).size.toDouble / jacc.size
     assert(recall >= 0.8, s"recall $recall too low; missing ${jacc -- sim}")
+  }
+
+  /** Sorted rows of a driver-path frame and of its `gate` = 0 twin,
+    * whose schemas must match; a double compares by its bits.
+    */
+  private def bothPaths(gated: => DataFrame,
+      loop: => DataFrame): (Seq[String], Seq[String]) = {
+    val (g, l) = (gated, loop)
+    assert(g.schema == l.schema, s"${g.schema} vs ${l.schema}")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d).toString
+      case x => String.valueOf(x)
+    }.mkString(",")).toSeq.sorted
+    val out = (rows(g), rows(l))
+    ScratchCaches.releaseAll()
+    out
+  }
+
+  private def sigPairs(sigs: DataFrame, gate: Long = Skew.BroadcastRowGate) =
+    bothPaths(Dedup.signaturePairs(sigs, 7, gate),
+      Dedup.signaturePairs(sigs, 7, 0))
+
+  test("simhash pairs: the driver buckets match the banding join row for " +
+      "row, on the fixture and on seeded signatures") {
+    import spark.implicits._
+    val (fl, fj) = bothPaths(Dedup.simhashPairs(docs, 7),
+      Dedup.simhashPairsGated(docs, 7, 0))
+    assert(fl.nonEmpty && fl == fj)
+    val (f3, j3) = bothPaths(Dedup.simhashPairs(docs, 3),
+      Dedup.simhashPairsGated(docs, 3, 0))
+    assert(f3 == j3)
+    // clusters around random bases at distances 0..9 from the base:
+    // 7 pairs, 8 does not
+    val rnd = new scala.util.Random(7)
+    def flip(h: Long, d: Int): Long =
+      rnd.shuffle((0 until 64).toList).take(d).foldLeft(h)((x, b) =>
+        x ^ (1L << b))
+    val clustered = (0 until 20).flatMap { c =>
+      val base = rnd.nextLong()
+      (0 to 9).map(d => (c * 100L + d, flip(base, d)))
+    }
+    val (cl, cj) = sigPairs(clustered.toDF("doc_id", "simhash"))
+    assert(cl == cj)
+    assert(cl.exists(_.endsWith(",7")) && !cl.exists(_.endsWith(",8")))
+    // Int ids keep their type
+    val ints = clustered.take(30).map { case (i, h) => (i.toInt, h) }
+    val (il, ij) = sigPairs(ints.toDF("doc_id", "simhash"))
+    assert(il == ij && il.nonEmpty)
+    assert(Dedup.signaturePairs(ints.toDF("doc_id", "simhash"), 7,
+      Skew.BroadcastRowGate).schema("da").dataType == IntegerType)
+    // a null id or signature pairs with nothing
+    val nulls = clustered.take(10).map { case (i, h) =>
+      (Option(i), Option(h)) } ++ Seq((None, Some(clustered.head._2)),
+      (Some(999L), None))
+    val (nl, nj) = sigPairs(nulls.toDF("doc_id", "simhash"))
+    assert(nl == nj && nl.nonEmpty)
+    // 1,200 signatures in one bucket: equal low 32 bits, so every table
+    // over the first blocks puts them together
+    val low = rnd.nextLong() & 0xffffffffL
+    val hot = (0 until 1200).map(i => (i.toLong,
+      if (i % 3 == 0) flip(low | (7L << 40), rnd.nextInt(5))
+      else low | (rnd.nextLong() << 32)))
+    val (hl, hj) = sigPairs(hot.toDF("doc_id", "simhash"))
+    assert(hl == hj && hl.size > 100)
+  }
+
+  test("simhash pairs fall back to the banding join just past the gate, " +
+      "in rows or in pairs") {
+    import spark.implicits._
+    val gate = 40L
+    val rnd = new scala.util.Random(3)
+    val sigs = (0L to gate).map(i => (i,
+      if (i % 10 == 0) 0x5555L ^ (1L << rnd.nextInt(64)) else rnd.nextLong()))
+    def registered(df: DataFrame) = {
+      ScratchCaches.releaseAll()
+      Dedup.signaturePairs(df, 7, gate)
+      val n = ScratchCaches.activeCount
+      ScratchCaches.releaseAll()
+      n
+    }
+    val atGate = sigs.take(gate.toInt).toDF("doc_id", "simhash")
+    assert(registered(atGate) == 0, "at the gate: the driver")
+    val (at, atLoop) = sigPairs(atGate, gate)
+    assert(at == atLoop && at.size == 6)
+    val pastGate = sigs.toDF("doc_id", "simhash")
+    assert(registered(pastGate) == 2, "past the gate: the join")
+    val (pl, pj) = sigPairs(pastGate, gate)
+    assert(pl == pj && pl.size == 10)
+    // 12 equal signatures: 12 rows, but 66 pairs
+    val same = (1L to 12L).map(i => (i, 0x77L)).toDF("doc_id", "simhash")
+    assert(registered(same) == 2, "more pairs than the gate: the join")
+    val (sl, sj) = sigPairs(same, gate)
+    assert(sl == sj && sl.size == 66)
+  }
+
+  test("simhash and semdedup pairs within the gate: at most 5 and 7 Spark " +
+      "jobs with the result's count") {
+    // measured 5 and 7; the distributed paths start 7 and 10. Of these,
+    // the result's count takes 2 (an aggregate's exchange under AQE) and
+    // the cached signatures 3: the fixture's fan-out exchange, the
+    // cached plan's result stage, and the read. Opening a table may
+    // start a job of its own, so both are opened before counting.
+    val (texts, vecs) = (docs, emb)
+    val (n, jobs) = org.apache.spark.TestJobs.count(spark.sparkContext)(
+      Dedup.simhashPairs(texts, 7).count())
+    assert(jobs <= 5, s"simhash: $jobs jobs")
+    assert(n == Dedup.simhashPairsGated(texts, 7, 0).count())
+    // emb.count() (2 jobs), the centroids' seed and training reads, the
+    // read of the vectors, and the result's count
+    val (m, semJobs) = org.apache.spark.TestJobs.count(spark.sparkContext)(
+      Similarity.semdedupPairs(vecs, 0.4).count())
+    assert(semJobs <= 7, s"semdedup: $semJobs jobs")
+    assert(m == Similarity.semdedupPairsGated(vecs, 0.4, gate = 0).count())
+    ScratchCaches.releaseAll()
+  }
+
+  private def semPaths(emb: DataFrame, tau: Double, nlist: Int = 16,
+      refineIters: Int = 3, assign: Int = 2,
+      gate: Long = Skew.BroadcastRowGate) =
+    bothPaths(
+      Similarity.semdedupPairsGated(emb, tau, nlist, refineIters, assign,
+        gate = gate),
+      Similarity.semdedupPairsGated(emb, tau, nlist, refineIters, assign,
+        gate = 0))
+
+  test("semdedup pairs: the driver path matches the list self-join row " +
+      "for row, cosines bit for bit") {
+    import spark.implicits._
+    val (fl, fj) = semPaths(emb, 0.4)
+    assert(fl.nonEmpty && fl == fj)
+    val (f1, j1) = semPaths(emb, 0.2, nlist = 5, assign = 1)
+    assert(f1 == j1)
+    // seeded clusters of 8-dim vectors, plus exact duplicates (cos 1 ties)
+    val rnd = new scala.util.Random(11)
+    val centres = Seq.fill(6)(Seq.fill(8)(rnd.nextGaussian().toFloat))
+    val vecs = (0 until 300).map { i =>
+      (i.toLong, centres(i % 6).map(x => x + 0.3f * rnd.nextGaussian().toFloat))
+    }
+    val withDups = vecs ++ vecs.take(20).map { case (i, v) => (i + 1000, v) }
+    val synth = withDups.toDF("vec_id", "embedding")
+    for ((nlist, assign) <- Seq((4, 2), (6, 1), (3, 3))) {
+      val (sl, sj) = semPaths(synth, 0.9, nlist = nlist, assign = assign)
+      assert(sl.nonEmpty && sl == sj, s"nlist $nlist assign $assign")
+    }
+    // centroid-score ties: with refineIters 0 the centroids are the two
+    // lowest ids, (1, 0) and (0, 1); (1, 1) and (2, 2) score equally on
+    // both, and assign = 1 sends them to the lowest list id
+    val tie = Seq((0L, Seq(1f, 0f)), (1L, Seq(0f, 1f)), (2L, Seq(1f, 1f)),
+      (3L, Seq(2f, 2f)), (4L, Seq(1f, 0.5f)), (5L, Seq(0.5f, 1f)),
+      (6L, Seq(-1f, 1f)), (7L, Seq(1f, -1f))).toDF("vec_id", "embedding")
+    for (assign <- 1 to 3) {
+      val (tl, tj) = semPaths(tie, 0.0, nlist = 2, refineIters = 0,
+        assign = assign)
+      assert(tl == tj, s"assign $assign")
+      assert(tl.exists(_.startsWith("2,3,")), s"assign $assign: $tl")
+    }
+  }
+
+  test("semdedup pairs: input the driver path refuses gets the " +
+      "distributed answer or error") {
+    import spark.implicits._
+    import scala.util.Try
+    val rnd = new scala.util.Random(5)
+    val base = (0 until 30).map(i =>
+      (Option(i.toLong), Option(Seq.fill(4)(
+        Option(rnd.nextGaussian().toFloat + (i % 2) * 2f)))))
+    def outcome(rows: Seq[(Option[Long], Option[Seq[Option[Float]]])],
+        gate: Long) = {
+      val df = rows.toDF("vec_id", "embedding")
+      val out = Try(Similarity.semdedupPairsGated(df, 0.5, nlist = 2,
+        gate = gate).collect().map(_.toString).toSeq.sorted)
+      ScratchCaches.releaseAll()
+      out.toEither.left.map(e => Option(e.getCause).getOrElse(e).getClass)
+    }
+    def put(i: Int, v: Option[Seq[Option[Float]]]) =
+      base.updated(i, (Some(i.toLong), v))
+    val cases = Seq(
+      "null id" -> base.updated(20, (None, base(20)._2)),
+      "null embedding" -> put(20, None),
+      "null element" -> put(20, Some(Seq(Some(1f), None, Some(1f), Some(1f)))),
+      "NaN" -> put(20, Some(Seq.fill(4)(Some(Float.NaN)))),
+      "infinity" -> put(21, Some(Seq(Some(Float.PositiveInfinity), Some(0f),
+        Some(0f), Some(0f)))),
+      "zero vector" -> put(20, Some(Seq.fill(4)(Some(0f)))),
+      "mixed dimensions" -> put(20, Some(Seq.fill(3)(Some(1f)))))
+    for ((name, rows) <- cases) {
+      val (local, loop) = (outcome(rows, Skew.BroadcastRowGate),
+        outcome(rows, 0))
+      assert(local == loop, name)
+    }
+    assert(outcome(base, Skew.BroadcastRowGate).isRight)
+  }
+
+  test("semdedup pairs fall back to the list self-join just past the gate") {
+    import spark.implicits._
+    val gate = 60L
+    val rnd = new scala.util.Random(9)
+    val near = Seq.fill(6)(rnd.nextGaussian().toFloat)
+    // every 10th vector is a near-duplicate of `near`, the rest random
+    val vecs = (0L to gate).map(i => (i,
+      if (i % 10 == 0) near.map(_ + 0.01f * rnd.nextGaussian().toFloat)
+      else Seq.fill(6)(rnd.nextGaussian().toFloat)))
+    def registered(df: DataFrame) = {
+      ScratchCaches.releaseAll()
+      Similarity.semdedupPairsGated(df, 0.95, nlist = 3, gate = gate)
+      val n = ScratchCaches.activeCount
+      ScratchCaches.releaseAll()
+      n
+    }
+    val atGate = vecs.take(gate.toInt).toDF("vec_id", "embedding")
+    assert(registered(atGate) == 0, "at the gate: the driver")
+    val (at, atLoop) = semPaths(atGate, 0.95, nlist = 3, gate = gate)
+    assert(at == atLoop && at.nonEmpty)
+    val pastGate = vecs.toDF("vec_id", "embedding")
+    assert(registered(pastGate) == 1, "past the gate: the self-join")
+    val (pl, pj) = semPaths(pastGate, 0.95, nlist = 3, gate = gate)
+    assert(pl == pj && pl.size > at.size)
   }
 
   test("LSH ANN cosines are bounded by brute-force top-1 per query") {

@@ -588,7 +588,8 @@ class PlansSpec extends AnyFunSuite {
   test("semdedup joins on list_id only; pair join reads the persisted " +
       "assignment") {
     val emb = graft.io.Tables(spark, sf, "embeddings")
-    val df = graft.ops.Similarity.semdedupPairs(emb, 0.4)
+    // gate 0: the distributed path (within the gate the driver answers)
+    val df = graft.ops.Similarity.semdedupPairsGated(emb, 0.4, gate = 0)
     val plan = df.queryExecution.executedPlan.toString
     // both self-join sides must come from the InMemory assignment table
     // (the nlist-way soft-assign fold would otherwise run once per side)

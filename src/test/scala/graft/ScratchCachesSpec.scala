@@ -72,7 +72,7 @@ class ScratchCachesSpec extends AnyFunSuite {
       "scratch caches leaked past retained{}")
     // manual toggle path: setRetain(true) + forced release
     ScratchCaches.setRetain(true)
-    Dedup.simhashPairs(docs).count()
+    Dedup.simhashPairsGated(docs, gate = 0).count() // registers its persists
     ScratchCaches.releaseAll()
     assert(ScratchCaches.activeCount > 0)
     ScratchCaches.releaseAll(force = true)
