@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.graftbridge.Deferred
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.Skew
@@ -27,6 +28,12 @@ import graft.ops.Skew
   * Rows come from the executed plan's RDD (`queryExecution.toRdd`, the
   * plan the DataFrame already has; `df.rdd` would plan the query again)
   * and are decoded on the driver.
+  *
+  * [[deferred]] exists because the library ops return lazy frames: a
+  * caller builds an op's frame, persists or joins it, and times or
+  * explains the action that runs it. An op that solves its answer on the
+  * driver wraps that solve in [[deferred]], so its jobs run in the
+  * caller's action, not when the op is called.
   */
 object Fetch {
 
@@ -70,6 +77,18 @@ object Fetch {
   private[graft] def frame(spark: SparkSession, rows: Seq[Row],
       schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+  /** A frame of `schema` whose rows are `body`'s, evaluated once, when a
+    * job first needs them (see
+    * [[org.apache.spark.sql.graftbridge.Deferred]]): building it starts
+    * no job, and a throwing `body` fails the action, not this call.
+    * `body` must return `schema` exactly, or the action fails. After it
+    * has run, the frame's executed plan shows `body`'s plan as an inner
+    * child.
+    */
+  private[graft] def deferred(spark: SparkSession, schema: StructType)(
+      body: => DataFrame): DataFrame =
+    Deferred.frame(spark, schema)(body)
 
   /** One job: the first `limit` rows of each of `parts`, copied out of
     * the executors' reused row buffers.

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, graftbridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.io.Fetch
@@ -580,31 +580,153 @@ object Dedup {
         graft.expr.MinHashSig.sigCol(col("sh"), numHashes).as("sig"))
 
   /** LSH banding: candidates = pairs agreeing on at least one band
-    * (bandRows hashes per band). Shuffle key is (band, bandSig) — short
-    * and uniform; then verify candidates with exact Jaccard on the
-    * shingle sets (array_intersect on the two docs only).
+    * (`numHashes / bands` signature entries per band), verified with
+    * exact Jaccard on the shingle sets: `inter * den >= union * num`.
     *
-    * The signature table is persisted and only (doc_id, band, bsig) rows
-    * flow through the band self-join — the shingle arrays never ride the
-    * ×bands explode/exchange; verification joins them back per candidate
-    * from the cached table (the retry precondition NEXT.md recorded:
-    * without the persist, the joins recomputed the signature projection
-    * and regressed 18×).
+    * The op is lazy: the returned frame is a [[Fetch.deferred]] one, and
+    * every job below runs in the action that first needs its rows. The
+    * unfiltered signature table is persisted there and read once as
+    * (`doc_id`, band keys), 16 longs per doc at the defaults. Within
+    * [[Skew.BroadcastRowGate]] signatures with integral, unique ids, the
+    * driver buckets each band's keys, and as long as the candidates and
+    * the docs they name stay within the gate, a second read fetches only
+    * those docs' shingle arrays from the cache; the driver verifies them
+    * with the join's Int arithmetic and the pairs come back as a
+    * [[Fetch.frame]] of the join's schema, with nothing left cached.
+    * Past the gate, or on input the driver path does not take, the
+    * banding self-join below runs over the cached signatures, which stay
+    * registered with [[ScratchCaches]]; such input pays one extra
+    * limited read, which also fills the cache the join then reads.
+    *
+    * The join's shuffle key is (band, band key) — short and uniform —
+    * and only (doc_id, band, key) rows flow through the band self-join:
+    * the shingle arrays never ride the ×bands explode/exchange;
+    * verification joins them back per candidate from the cached table
+    * (without the persist, the joins recomputed the signature
+    * projection and regressed 18×).
     */
   def minhashLshPairs(docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
-      num: Int = 8, den: Int = 10, k: Int = 3): DataFrame = {
+      num: Int = 8, den: Int = 10, k: Int = 3): DataFrame =
+    minhashLshPairsGated(docs, numHashes, bands, num, den, k)
+
+  /** [[minhashLshPairs]] with its gate: `gate` = 0 forces the banding
+    * join.
+    */
+  private[graft] def minhashLshPairsGated(docs: DataFrame,
+      numHashes: Int = 64, bands: Int = 16, num: Int = 8, den: Int = 10,
+      k: Int = 3, gate: Long = Skew.BroadcastRowGate): DataFrame = {
     val rows = numHashes / bands
-    // cache the UNFILTERED signature pass, filter above the cache
-    // barrier (see minhashSignaturesRaw). Emitted pairs are unchanged —
-    // empty docs never reach banding or verification.
-    val sigs = minhashSignaturesRaw(docs, numHashes, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(ScratchCaches.track)
-      .where(size(col("sh")) > 0)
+    // empty docs never reach banding or verification
+    def nonEmpty(raw: DataFrame) = raw.where(size(col("sh")) > 0)
+    val schema = bandedLshPairs(
+      nonEmpty(minhashSignaturesRaw(docs, numHashes, k)), bands, rows, num,
+      den).schema
+    Fetch.deferred(docs.sparkSession, schema) {
+      // cache the UNFILTERED signature pass, filter above the cache
+      // barrier (see minhashSignaturesRaw)
+      val raw = minhashSignaturesRaw(docs, numHashes, k)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sigs = nonEmpty(raw)
+      val local =
+        try localLshPairs(sigs, bands, rows, num, den, schema, gate)
+        catch { case e: Throwable => raw.unpersist(); throw e }
+      local match {
+        case Some(pairs) => raw.unpersist(); pairs
+        case None =>
+          ScratchCaches.track(raw)
+          bandedLshPairs(sigs, bands, rows, num, den)
+      }
+    }
+  }
+
+  /** The key of LSH band `b` (an int column): xxhash64 over the band's
+    * `rows` signature entries.
+    */
+  private def bandKey(b: Column, rows: Int): Column =
+    xxhash64((0 until rows).map(r =>
+      element_at(col("sig"), b * rows + r + 1)): _*)
+
+  /** The pairs of [[minhashLshPairs]] found on the driver, as a
+    * [[Fetch.frame]] of `schema`, or None (the caller runs the banding
+    * join, with its own answer or error). Rows with a null id are
+    * skipped: the join's `<` never pairs them. The driver path does not
+    * take ids that are not integral, a repeated id (the join pairs such
+    * rows as a cross product), more than `gate` signatures, candidates or
+    * candidate docs, or an Int overflow in the verification test (the
+    * join raises its own ANSI error).
+    */
+  private def localLshPairs(sigs: DataFrame, bands: Int, rows: Int,
+      num: Int, den: Int, schema: StructType,
+      gate: Long): Option[DataFrame] = {
+    if (!IntegralIds(sigs.schema("doc_id").dataType)) return None
+    val keyed = Fetch.atMost(sigs.select(col("doc_id"),
+        transform(sequence(lit(0), lit(bands - 1)), b => bandKey(b, rows))),
+      gate).getOrElse(return None)
+      .filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+    val n = keyed.length
+    val ids = keyed.map(_.getAs[Number](0).longValue)
+    if (ids.distinct.length < n) return None
+    val keys = keyed.map(_.getSeq[Long](1).toArray)
+    // candidates as (x << 32 | y) over row numbers, ids(x) < ids(y)
+    val cands = scala.collection.mutable.HashSet.empty[Long]
+    var b = 0
+    while (b < bands && cands.size <= gate) {
+      val byKey = Array.range(0, n).sortBy(i => keys(i)(b))
+      var lo = 0
+      while (lo < n && cands.size <= gate) {
+        var hi = lo + 1
+        while (hi < n && keys(byKey(hi))(b) == keys(byKey(lo))(b)) hi += 1
+        var a = lo
+        while (a < hi && cands.size <= gate) {
+          for (c <- a + 1 until hi) {
+            val (x, y) = (byKey(a), byKey(c))
+            cands += (if (ids(x) < ids(y)) x.toLong << 32 | y
+              else y.toLong << 32 | x)
+          }
+          a += 1
+        }
+        lo = hi
+      }
+      b += 1
+    }
+    if (cands.size > gate) return None
+    val spark = sigs.sparkSession
+    if (cands.isEmpty) return Some(Fetch.frame(spark, Nil, schema))
+    val members = cands.iterator.flatMap(p => Iterator((p >>> 32).toInt,
+      p.toInt)).toSet
+    if (members.size > gate) return None
+    val inSet = graftbridge.ColumnBridge.column(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        graftbridge.ColumnBridge.expression(col("doc_id")),
+        members.map(keyed(_).get(0))))
+    val sh = Fetch.atMost(sigs.where(inSet).select(col("doc_id"), col("sh")),
+      gate).getOrElse(return None)
+      .map(r => r.getAs[Number](0).longValue -> r.getSeq[Any](1)).toMap
+    val out = cands.iterator.map { p =>
+      val (x, y) = ((p >>> 32).toInt, p.toInt)
+      val (sa, sb) = (sh(ids(x)), sh(ids(y)))
+      val inter = sa.toSet.intersect(sb.toSet).size
+      (x, y, inter, sa.length, sb.length)
+    }.toVector
+    try {
+      val kept = out.filter { case (_, _, inter, na, nb) =>
+        Math.multiplyExact(inter, den) >= Math.multiplyExact(
+          Math.subtractExact(Math.addExact(na, nb), inter), num)
+      }
+      Some(Fetch.frame(spark, kept.map { case (x, y, inter, na, nb) =>
+        Row(keyed(x).get(0), keyed(y).get(0), inter, na, nb)
+      }, schema))
+    } catch { case _: ArithmeticException => None }
+  }
+
+  /** The distributed banding self-join of [[minhashLshPairs]] over the
+    * non-empty signatures `sigs`.
+    */
+  private def bandedLshPairs(sigs: DataFrame, bands: Int, rows: Int,
+      num: Int, den: Int): DataFrame = {
     val banded = sigs.select(col("doc_id"),
       explode(transform(sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band"),
-          xxhash64((0 until rows).map(r =>
-            element_at(col("sig"), b * rows + r + 1)): _*).as("bsig"))))
+        b => struct(b.as("band"), bandKey(b, rows).as("bsig"))))
         .as("bb"))
       .select(col("doc_id"), col("bb.band"), col("bb.bsig"))
     val cands = banded.as("a").join(banded.as("b"),
@@ -689,10 +811,14 @@ object Dedup {
     * with [[ScratchCaches]] next to the keyed table; such input pays one
     * probe job, which also fills that cache. Verification computes the
     * true hamming distance per candidate and filters BEFORE the
-    * pair-dedup exchange.
+    * pair-dedup exchange. The returned frame is a [[Fetch.deferred]] one:
+    * all of this runs in the action that first needs its rows.
     */
-  def simhashPairs(docs: DataFrame, maxDist: Int = 7): DataFrame =
-    simhashPairsGated(docs, maxDist)
+  def simhashPairs(docs: DataFrame, maxDist: Int = 7): DataFrame = {
+    val sigs = simhash(docs)
+    Fetch.deferred(docs.sparkSession, pairsSchema(sigs))(
+      signaturePairs(sigs, maxDist, Skew.BroadcastRowGate))
+  }
 
   /** [[simhashPairs]] with its gate: `gate` = 0 forces the distributed
     * banding join.
@@ -765,13 +891,17 @@ object Dedup {
         }
       }
       if (out.size > gate) None
-      else {
-        val id = sh.schema("doc_id")
-        Some(Fetch.frame(sh.sparkSession, out.toSeq, StructType(Seq(
-          id.copy(name = "da"), id.copy(name = "db"),
-          StructField("dist", IntegerType, sh.schema("simhash").nullable)))))
-      }
+      else Some(Fetch.frame(sh.sparkSession, out.toSeq, pairsSchema(sh)))
     }
+  }
+
+  /** The schema of [[simhashPairs]] over (`doc_id`, `simhash`) rows:
+    * the banding join's, with no analysis of it.
+    */
+  private def pairsSchema(sigs: DataFrame): StructType = {
+    val id = sigs.schema("doc_id")
+    StructType(Seq(id.copy(name = "da"), id.copy(name = "db"),
+      StructField("dist", IntegerType, sigs.schema("simhash").nullable)))
   }
 
   /** The distributed banding self-join of [[simhashPairs]] over the

@@ -24,8 +24,8 @@ import org.apache.spark.sql.DataFrame
   * Releasing before the consuming action is safe but wasteful: the plan
   * recomputes the subtree (correctness is never at stake). An op whose
   * result does not read its scratch releases it itself and does not
-  * register it ([[Dedup.dupClusters]], and [[Dedup.simhashPairs]] when
-  * it answers on the driver).
+  * register it ([[Dedup.dupClusters]], and [[Dedup.minhashLshPairs]]
+  * and [[Dedup.simhashPairs]] when they answer on the driver).
   */
 object ScratchCaches {
   private val tracked =

@@ -313,13 +313,16 @@ object Similarity {
     * within-cluster self-join shuffles on the short `list_id` key —
     * quadratic only within a cluster, and nlist is the knob that bounds
     * cluster population (set nlist ~ corpus/10k at real scale; 25k
-    * clusters over 8M docs in the paper).
+    * clusters over 8M docs in the paper). The returned frame is a
+    * [[graft.io.Fetch.deferred]] one: all of this, the count included,
+    * runs in the action that first needs its rows.
     */
   def semdedupPairs(emb: DataFrame, tau: Double, nlist: Int = 16,
       refineIters: Int = 3, assign: Int = 2,
       targetClusterSize: Long = 256): DataFrame =
-    semdedupPairsGated(emb, tau, nlist, refineIters, assign,
-      targetClusterSize)
+    Fetch.deferred(emb.sparkSession, semdedupSchema(emb, tau))(
+      semdedupPairsGated(emb, tau, nlist, refineIters, assign,
+        targetClusterSize))
 
   /** [[semdedupPairs]] with its gate: `gate` = 0 forces the distributed
     * list self-join.
@@ -347,7 +350,9 @@ object Similarity {
       math.max(nlist.toLong, n / targetClusterSize)).toInt
     val cents = ivfCentroidsLocal(emb, effNlist, refineIters)
     val local =
-      if (n <= gate) localSemdedup(emb, cents, tau, assign, gate) else None
+      if (n <= gate)
+        localSemdedup(emb, cents, tau, assign, semdedupSchema(emb, tau), gate)
+      else None
     if (local.isDefined) return local.get
     // persist BEFORE the explode: Generate re-evaluates a non-trivial
     // generator once per OUTPUT row (the dd15 lesson), so the nlist-way
@@ -365,8 +370,14 @@ object Similarity {
         topLists(cents, col("embedding"), col("norm2"), assign))
       .select(col("vec_id"), col("embedding"), col("norm2"), col("__lists"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).transform(ScratchCaches.track)
-    val assigned = assignedArr.select(col("vec_id"), col("embedding"),
-      col("norm2"), explode(col("__lists")).as("list_id"))
+    listPairs(assignedArr.select(col("vec_id"), col("embedding"),
+      col("norm2"), explode(col("__lists")).as("list_id")), tau)
+  }
+
+  /** The list self-join of [[semdedupPairs]] over (`vec_id`,
+    * `embedding`, `norm2`, `list_id`) rows.
+    */
+  private def listPairs(assigned: DataFrame, tau: Double): DataFrame = {
     val a = assigned.select(col("list_id"), col("vec_id").as("va"),
       col("embedding").as("ea"), col("norm2").as("na"))
     val b = assigned.select(col("list_id"), col("vec_id").as("vb"),
@@ -377,6 +388,13 @@ object Similarity {
       .select(col("va"), col("vb"), col("cos"))
       .dropDuplicates("va", "vb")
   }
+
+  /** The schema of [[listPairs]] over `emb`, by analysis alone: the
+    * list ids never reach the output, so one constant list stands in.
+    */
+  private def semdedupSchema(emb: DataFrame, tau: Double): StructType =
+    listPairs(withNorm(emb).select(col("vec_id"), col("embedding"),
+      col("norm2"), lit(0).as("list_id")), tau).schema
 
   /** The pairs of [[semdedupPairs]] computed on the driver, or None (the
     * caller runs the distributed path, with its own answer or error).
@@ -395,7 +413,8 @@ object Similarity {
     * integral, or an answer of more than `gate` pairs.
     */
   private def localSemdedup(emb: DataFrame, cents: Seq[Centroid],
-      tau: Double, assign: Int, gate: Long): Option[DataFrame] = {
+      tau: Double, assign: Int, schema: StructType,
+      gate: Long): Option[DataFrame] = {
     val idField = emb.schema("vec_id")
     val floats = emb.schema("embedding").dataType match {
       case ArrayType(FloatType, _) => true
@@ -490,9 +509,7 @@ object Similarity {
     } yield Row(rows(x).get(0), rows(y).get(0), cos)
     val pairs = out.take(gate.toInt + 1).toVector
     if (pairs.size > gate) None
-    else Some(Fetch.frame(emb.sparkSession, pairs, StructType(Seq(
-      idField.copy(name = "va"), idField.copy(name = "vb"),
-      StructField("cos", DoubleType, nullable = true)))))
+    else Some(Fetch.frame(emb.sparkSession, pairs, schema))
   }
 
   /** [[graft.expr.DotSeq]]'s fold over equal-length float arrays. */

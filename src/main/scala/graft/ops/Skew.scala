@@ -21,9 +21,10 @@ object Skew {
     * driver collects in one job: [[graft.io.Fetch]] (result rows),
     * [[graft.exec.PathExec]] (closures solved on the driver),
     * [[Dedup.dupClusters]] (near-dup components solved on the driver),
-    * [[Dedup.simhashPairs]] (signatures bucketed on the driver) and
-    * [[Similarity.semdedupPairs]] (vectors assigned and compared on the
-    * driver).
+    * [[Dedup.minhashLshPairs]] (band keys bucketed and candidates
+    * verified on the driver), [[Dedup.simhashPairs]] (signatures
+    * bucketed on the driver) and [[Similarity.semdedupPairs]] (vectors
+    * assigned and compared on the driver).
     */
   val BroadcastRowGate: Long = 1L << 17
 

@@ -79,4 +79,47 @@ class FetchSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(f, lines.mkString("", "\n", "\n"))
     assert(RdfIO.read(spark, f.toString, "ttl").count() == 100)
   }
+
+  test("a deferred frame runs its body once, in the first action") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType)))
+    var runs = 0
+    val (df, built) = jobs(Fetch.deferred(spark, schema) {
+      runs += 1
+      val r = spark.range(0, 10, 1, 2).toDF("id")
+      r.groupBy((col("id") % 3).as("k")).agg(max("id").as("id")).select("id")
+    })
+    assert(built == 0 && runs == 0, s"$built jobs, $runs runs at build")
+    assert(df.count() == 3 && df.collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(7L, 8L, 9L))
+    assert(runs == 1)
+    // persisted, then read twice
+    val kept = df.persist()
+    assert(kept.count() == 3 && kept.where(col("id") > 7).count() == 2)
+    assert(runs == 1)
+    kept.unpersist()
+    // a self-join gets fresh attributes on one side
+    val self = df.as("a").join(df.as("b"), col("a.id") < col("b.id"))
+    assert(self.count() == 3)
+    assert(runs == 1)
+    // after execution, the plan shows the body's plan as an inner child
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("Deferred") && plan.contains("HashAggregate"), plan)
+  }
+
+  test("a deferred body that throws or changes schema fails the action") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType, false)))
+    val boom = Fetch.deferred(spark, schema) {
+      throw new IllegalArgumentException("boom")
+    }
+    val e = intercept[Exception](boom.collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "boom"), e)
+    val other = Fetch.deferred(spark, schema)(
+      spark.range(3).select(col("id").cast("int").as("id")))
+    val m = intercept[Exception](other.count())
+    assert(Iterator.iterate[Throwable](m)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[IllegalStateException]), m)
+  }
 }

@@ -16,10 +16,15 @@ class PipelineSpec extends AnyFunSuite {
   test("minhash LSH finds every exact-jaccard pair (recall = 1 here)") {
     val exact = Dedup.ngramJaccardPairs(docs, 8, 10)
       .select("da", "db").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Dedup.minhashLshPairs(docs, 64, 16, 8, 10)
-      .select("da", "db").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty, "fixture should contain near-dup pairs")
-    assert(lsh == exact, s"LSH verified output must equal exact pairs")
+    for (gate <- Seq(Skew.BroadcastRowGate, 0L)) {
+      val lsh = Dedup.minhashLshPairsGated(docs, 64, 16, 8, 10, gate = gate)
+        .select("da", "db").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(lsh == exact, s"gate $gate: LSH verified output must equal " +
+        "exact pairs")
+    }
+    ScratchCaches.releaseAll()
   }
 
   test("native MinHashSig is bit-identical to the HOF formulation") {
@@ -400,6 +405,122 @@ class PipelineSpec extends AnyFunSuite {
       Similarity.semdedupPairs(vecs, 0.4).count())
     assert(semJobs <= 7, s"semdedup: $semJobs jobs")
     assert(m == Similarity.semdedupPairsGated(vecs, 0.4, gate = 0).count())
+    ScratchCaches.releaseAll()
+  }
+
+  private def lshPaths(docs: DataFrame, gate: Long = Skew.BroadcastRowGate) =
+    bothPaths(Dedup.minhashLshPairsGated(docs, gate = gate),
+      Dedup.minhashLshPairsGated(docs, gate = 0))
+
+  /** Seeded texts: `clusters` bases of 60 words from a 400-word
+    * vocabulary, each with `copies` variants that swap `edits` words (one
+    * swap on each side of a pair leaves a Jaccard near 0.8).
+    */
+  private def lshCorpus(seed: Int, clusters: Int, copies: Int,
+      edits: Int): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until clusters).flatMap { c =>
+      val base = Vector.fill(60)(s"w${rnd.nextInt(400)}")
+      (0 until copies).map { v =>
+        val ws = (0 until edits).foldLeft(base)((w, _) =>
+          w.updated(rnd.nextInt(w.size), s"x${rnd.nextInt(400)}"))
+        (c * 100L + v, ws.mkString(" "))
+      }
+    }
+  }
+
+  test("minhash pairs: the driver path matches the banding join row for " +
+      "row, on the fixture and on seeded corpora") {
+    import spark.implicits._
+    val (fl, fj) = lshPaths(docs)
+    assert(fl.nonEmpty && fl == fj)
+    // near-dup clusters at one and two edits per copy
+    for ((seed, edits) <- Seq((1, 1), (2, 2))) {
+      val (cl, cj) = lshPaths(lshCorpus(seed, 30, 5, edits)
+        .toDF("doc_id", "text"))
+      assert(cl == cj && (edits > 1 || cl.nonEmpty), s"seed $seed")
+    }
+    // 11 tokens, the last one swapped: 8 of 9 shingles shared, a
+    // Jaccard of exactly 8/10, where inter * 10 >= (na + nb - inter) * 8
+    // holds with equality
+    val words = (1 to 11).map(i => s"t$i")
+    val exact = Seq(
+      (1L, words.mkString(" ")),
+      (2L, (words.init :+ "u").mkString(" ")))
+    val (el, ej) = lshPaths(exact.toDF("doc_id", "text"))
+    assert(el == ej && el == Seq("1,2,8,9,9"), el)
+    // one text 300 times: every band puts all of them in one bucket
+    val hot = (1L to 300L).map(i => (i, "a b c d e f g"))
+    val (hl, hj) = lshPaths(hot.toDF("doc_id", "text"))
+    assert(hl == hj && hl.size == 300 * 299 / 2)
+    // Int ids keep their type
+    val ints = lshCorpus(3, 10, 4, 1).map { case (i, t) => (i.toInt, t) }
+      .toDF("doc_id", "text")
+    val (il, ij) = lshPaths(ints)
+    assert(il == ij && il.nonEmpty)
+    assert(Dedup.minhashLshPairs(ints).schema("da").dataType == IntegerType)
+  }
+
+  test("minhash pairs: input the driver path refuses gets the banding " +
+      "join's answer") {
+    import spark.implicits._
+    val base = lshCorpus(4, 6, 3, 0).map { case (i, t) =>
+      (Option(i), Option(t)) }
+    val cases = Seq(
+      "fewer than k tokens" -> (base :+ ((Some(900L), Some("a b")))),
+      "empty text" -> (base :+ ((Some(901L), Some("")))),
+      "null text" -> (base :+ ((Some(902L), None))),
+      "null id" -> (base :+ ((None, base.head._2))),
+      "repeated id" -> (base :+ ((base(1)._1, base(2)._2))))
+    for ((name, rows) <- cases) {
+      val (l, j) = lshPaths(rows.toDF("doc_id", "text"))
+      assert(l == j && l.nonEmpty, name)
+    }
+  }
+
+  test("minhash pairs fall back to the banding join just past the gate, " +
+      "in signatures or in candidates") {
+    import spark.implicits._
+    def registered(df: DataFrame, gate: Long) = {
+      ScratchCaches.releaseAll()
+      Dedup.minhashLshPairsGated(df, gate = gate).count()
+      val n = ScratchCaches.activeCount
+      ScratchCaches.releaseAll()
+      n
+    }
+    // 40 docs: 20 pairs of equal texts
+    val corpus = lshCorpus(5, 20, 2, 0).toDF("doc_id", "text")
+    assert(registered(corpus, 40) == 0, "at the gate: the driver")
+    assert(registered(corpus, 39) == 1, "past the gate: the join")
+    val (sl, sj) = lshPaths(corpus, 39)
+    assert(sl == sj && sl.size == 20)
+    // 12 copies of one text: 12 signatures, but 66 candidates
+    val same = (1L to 12L).map(i => (i, "p q r s t u v")).toDF("doc_id", "text")
+    assert(registered(same, 66) == 0, "66 candidates at gate 66")
+    assert(registered(same, 65) == 1, "more candidates than the gate")
+    val (cl, cj) = lshPaths(same, 65)
+    assert(cl == cj && cl.size == 66)
+  }
+
+  test("minhash pairs start no job when built, and at most 6 with the " +
+      "result's count within the gate") {
+    val texts = docs
+    texts.count()
+    val (pairs, built) = org.apache.spark.TestJobs.count(spark.sparkContext)(
+      Dedup.minhashLshPairs(texts))
+    assert(built == 0, s"$built jobs when built")
+    val (n, jobs) = org.apache.spark.TestJobs.count(spark.sparkContext)(
+      pairs.count())
+    assert(jobs <= 6, s"minhash: $jobs jobs")
+    assert(ScratchCaches.activeCount == 0)
+    assert(n == Dedup.minhashLshPairsGated(texts, gate = 0).count())
+    assert(pairs.queryExecution.executedPlan.toString
+      .contains("ran Scan ExistingRDD"))
+    // the other pair ops are deferred too
+    val (_, others) = org.apache.spark.TestJobs.count(spark.sparkContext) {
+      Dedup.simhashPairs(texts, 7); Similarity.semdedupPairs(emb, 0.4)
+    }
+    assert(others == 0, s"$others jobs when built")
     ScratchCaches.releaseAll()
   }
 

@@ -529,7 +529,10 @@ class PlansSpec extends AnyFunSuite {
     // verification joins; the persist must surface as InMemoryTableScans
     val docs = graft.io.Tables(spark, sf, "documents")
       .select(col("doc_id"), col("text")).limit(200)
-    val pairs = graft.ops.Dedup.minhashLshPairs(docs)
+    // gate 0: the banding join (within the gate the driver solves the
+    // pairs and nothing stays cached); its plan is the deferred node's
+    // inner child once the count has run it
+    val pairs = graft.ops.Dedup.minhashLshPairsGated(docs, gate = 0)
     pairs.count() // materializes the cache
     val plan = pairs.queryExecution.executedPlan.toString
     assert(plan.contains("InMemoryTableScan"),

@@ -63,7 +63,8 @@ class ScratchCachesSpec extends AnyFunSuite {
       ScratchCaches.releaseAll() // no-op while retaining
       assert(ScratchCaches.activeCount == warm,
         "releaseAll dropped scratch despite retention")
-      Dedup.minhashLshPairs(docs).count()
+      // gate 0: within the gate MinHash keeps no scratch persist
+      Dedup.minhashLshPairsGated(docs, gate = 0).count()
       assert(ScratchCaches.activeCount > warm)
     }
     assert(!ScratchCaches.retain, "retained{} leaked the mode")
